@@ -47,53 +47,37 @@ def normalize(a: Column) -> Column:
     return F.transform(a, lambda x: x / n)
 
 
-# (id(df), vec_col) → width. infer_dim runs a 1-row job; query builders
-# call it once per plan construction on session-cached DataFrames
-# (sources.readers.load_table), so memoizing by object identity turns
-# repeat constructions of the same query into zero extra jobs. The df
-# object is NOT held here (only its id) — load_table's cache owns the
-# lifetime, and a recycled id for a *different* df of the same column
-# would require that cache to have dropped it first, which it never does
-# within a session.
-#
-# Second-level key (r13): DERIVED frames get a fresh id() on every
-# plan construction, so under the honest bench protocol (no prepared-
-# plan reuse) each rebuild re-ran the 1-row job (~0.2 s of pure job
-# floor, 2-3× per PQ query). Semantically identical analyzed plans in
-# the same session resolve through (session id, vec_col, plan
-# semanticHash, column type): one py4j metadata call instead of a job.
-# This caches a schema-level scalar (the array width) — never rows —
-# the same class of metadata memo as sources.readers._TABLE_CACHE.
+# (session id, vec_col, analyzed-plan semanticHash, column type) →
+# width. infer_dim runs a 1-row job; query builders call it once per
+# plan construction, and every construction makes fresh derived
+# frames, so an identity key would miss on every rebuild (and a
+# recycled id() of a dropped frame could hand a different frame a stale
+# width). Semantically identical analyzed plans in one session resolve
+# through one py4j metadata call instead of a job. This caches a
+# schema-level scalar (the array width) — never rows — the same class
+# of metadata memo as sources.readers._TABLE_CACHE.
 _DIM_CACHE: dict[tuple, int] = {}
 
 
 def infer_dim(df, vec_col: str) -> int:
     """Vector width from one row (ArrayType carries no length)."""
-    key = (id(df), vec_col)
-    hit = _DIM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    skey = None
     try:
-        skey = (
+        key = (
             id(df.sparkSession),
             vec_col,
             df._jdf.queryExecution().analyzed().semanticHash(),
             df.schema[vec_col].dataType.simpleString(),
         )
     except Exception:
-        pass
-    if skey is not None:
-        hit = _DIM_CACHE.get(skey)
-        if hit is not None:
-            _DIM_CACHE[key] = hit
-            return hit
+        key = None
+    hit = _DIM_CACHE.get(key)
+    if hit is not None:
+        return hit
     row = df.select(F.size(F.col(vec_col)).alias("d")).limit(1).first()
     if row is None:
         raise ValueError(f"cannot infer dim of {vec_col!r}: empty DataFrame")
-    _DIM_CACHE[key] = row["d"]
-    if skey is not None:
-        _DIM_CACHE[skey] = row["d"]
+    if key is not None:
+        _DIM_CACHE[key] = row["d"]
     return row["d"]
 
 

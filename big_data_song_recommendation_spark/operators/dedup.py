@@ -75,9 +75,7 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, k: int, *, widen_input: bool = True
-) -> DataFrame:
+def shingle_rows(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(sid, sh) row per k-word shingle, built by exploding TOKENS and
     assembling shingles with window ``lead()``.
 
@@ -91,7 +89,6 @@ def shingle_rows(
     is needed before the explode."""
     from pyspark.sql import Window
 
-    del widen_input  # window shuffle spreads; pre-explode work is trivial
     # one-regex tokenizer; empties filtered BEFORE the window so they
     # never appear as lead() neighbors (Ftext.tokens contract)
     toks = df.select(
@@ -114,12 +111,10 @@ def _shingle_sets(
     text_col: str,
     k: int,
     max_df: int | None = None,
-    *,
-    widen_input: bool = True,
 ) -> DataFrame:
     """(id, shingle) distinct pairs; optionally drop shingles present
     in more than ``max_df`` docs (stop-shingle cap for skew)."""
-    sets = shingle_rows(df, id_col, text_col, k, widen_input=widen_input).distinct()
+    sets = shingle_rows(df, id_col, text_col, k).distinct()
     if max_df is not None:
         freq = sets.groupBy("sh").agg(F.count("*").alias("df"))
         sets = sets.join(freq.filter(F.col("df") <= max_df).select("sh"), "sh", "left_semi")
@@ -134,7 +129,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    widen_input: bool = True,
 ) -> DataFrame:
     """All-pairs n-gram-shingle Jaccard ≥ threshold.
 
@@ -144,7 +138,7 @@ def ngram_jaccard_pairs(
     100 TB prefer :func:`minhash_lsh_pairs`, which replaces the full
     self-join with banded buckets.
     """
-    sets = _shingle_sets(df, id_col, text_col, k, max_df, widen_input=widen_input).cache()
+    sets = _shingle_sets(df, id_col, text_col, k, max_df).cache()
     return jaccard_pairs_from_sets(sets, threshold=threshold)
 
 
@@ -1196,7 +1190,6 @@ def prefix_filter_jaccard_pairs(
     threshold_num: int = 1,
     threshold_den: int = 2,
     checkpoint: bool = True,
-    widen_input: bool = True,
     positional: bool = True,
     suffix: bool = False,
 ) -> DataFrame:
@@ -1284,7 +1277,7 @@ def prefix_filter_jaccard_pairs(
     n_, d_ = int(threshold_num), int(threshold_den)
     if not (0 < n_ <= d_):
         raise ValueError("threshold must be a fraction in (0, 1]")
-    sets = _shingle_sets(df, id_col, text_col, k, None, widen_input=widen_input)
+    sets = _shingle_sets(df, id_col, text_col, k, None)
     if checkpoint:
         sets = sets.localCheckpoint(eager=False)
     cand = _prefix_candidates(

@@ -6299,46 +6299,6 @@ _QUERY_FNS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 
-# ---------------------------------------------------------------------------
-# Prepared-plan layer.
-#
-# A DataFrame is an immutable lazy logical plan, so re-serving the same
-# (session, sf_dir, query) triple can reuse the built plan verbatim —
-# the prepared-statement cache every query service keeps (and what the
-# serving layer in plans/serving.py does per request). Building a plan
-# costs 40 ms-1.4 s of driver-side py4j round trips (one per Column op;
-# measured via scripts/floor_probe.py: 13.8 s across the 78-query suite
-# at sf0.1), all of which is per-plan, not per-execution.
-#
-# Execution is NOT cached: every action re-runs the full plan against
-# storage. Same discipline as sources/readers._TABLE_CACHE (the session
-# object is held in the value so a recycled id() can't alias a new
-# session). Kill-switch: SPARK_GRAFT_PLAN_CACHE=0.
-# ---------------------------------------------------------------------------
-
-_PLAN_CACHE: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
-
-
-def _prepared(
-    name: str, fn: Callable[[SparkSession, str], DataFrame]
-) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        if os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") == "0":
-            return fn(spark, sf_dir)
-        key = (id(spark), sf_dir, name)
-        hit = _PLAN_CACHE.get(key)
-        if hit is not None and hit[0] is spark:
-            return hit[1]
-        df = fn(spark, sf_dir)
-        _PLAN_CACHE[key] = (spark, df)
-        return df
-
-    run.__name__ = fn.__name__
-    run.__doc__ = fn.__doc__
-    run.__wrapped__ = fn  # type: ignore[attr-defined]
-    return run
-
-
 def _registry_order() -> list[str]:
     """Round-changed queries first (the external correctness gate only
     checks the first ~50 registry entries in insertion order).
@@ -6363,22 +6323,6 @@ def _registry_order() -> list[str]:
     return head + [n for n in _QUERY_FNS if n not in head]
 
 
-def evict_plan_cache(spark: SparkSession, names: set[str] | None = None) -> int:
-    """Drop this session's prepared-plan cache entries (all, or only
-    the named queries).  Public twin of the internal ``_PLAN_CACHE`` so
-    callers (``session.release_query_state``) never reach into module
-    privates.  Returns the number of entries evicted."""
-    sid = id(spark)
-    victims = [
-        k
-        for k in _PLAN_CACHE
-        if k[0] == sid and (names is None or k[2] in names)
-    ]
-    for k in victims:
-        del _PLAN_CACHE[k]
-    return len(victims)
-
-
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    name: _prepared(name, _QUERY_FNS[name]) for name in _registry_order()
+    name: _QUERY_FNS[name] for name in _registry_order()
 }

@@ -119,7 +119,7 @@ def release_query_state(
 ) -> int:
     """Free the blocks query execution pinned on the executors —
     ``.cache()`` / ``persist()`` entries AND ``localCheckpoint``
-    blocks — plus the prepared-plan cache entries that reference them.
+    blocks.
 
     Why this exists: several operators cut multi-consumer lineage with
     lazy ``localCheckpoint`` (ranks.bucketed_rank, gini_index, the CC
@@ -150,11 +150,6 @@ def release_query_state(
     batch are still released via their RDD ids; their stale cache
     entries rebuild on next use.
 
-    The plan cache MUST be dropped with the blocks: a cached plan that
-    already executed holds truncated-lineage RDDs whose blocks this
-    just freed — re-serving it would fail on the missing blocks, so
-    those plans rebuild (cheap, driver-side) on next request.
-
     Concurrency: a snapshot can't see blocks a sibling query pins
     AFTER it — releasing mid-flight frees those and kills the sibling
     on "block not found".  Multi-tenant callers run queries inside
@@ -163,8 +158,6 @@ def release_query_state(
     needs neither.
 
     Returns the number of RDDs unpersisted (telemetry)."""
-    from .plans.queries import evict_plan_cache
-
     def _release() -> int:
         persistent = spark.sparkContext._jsc.getPersistentRDDs()
         n = 0
@@ -175,7 +168,6 @@ def release_query_state(
             n += 1
         if keep is None:
             spark.catalog.clearCache()
-        evict_plan_cache(spark)
         return n
 
     if wait_for_idle:

@@ -80,17 +80,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if name in COMPUTE_DENSE_TABLES:
         df = _redistribute_if_underpartitioned(spark, df, f"{sf_dir}/{name}.parquet")
-    if os.environ.get("SPARK_GRAFT_PIN_TABLES") == "1":
-        # Opt-in hot-table pinning (bench.py sets this): persist the
-        # scanned table so a multi-query session decodes parquet once —
-        # Spark's buffer-pool equivalent of the OS page cache + buffer
-        # manager a single-process engine (the DuckDB oracle) reuses
-        # across its suite for free. Default OFF: unit tests assert
-        # parquet pushdown plan shapes, and on a real cluster pinning
-        # is a per-table call the operator makes for hot dims — you
-        # would pin region/nation/customer at 100 TB, never lineitem
-        # (MEMORY_AND_DISK would thrash; the scan is already columnar).
-        df = df.cache()
     _TABLE_CACHE[key] = (spark, df)
     return df
 

@@ -37,7 +37,6 @@ def main() -> None:
         env = dict(os.environ)
         env["SPARK_GRAFT_DRIVER_MEM"] = mem
         env["_BOUNDED_SWEEP_CHILD"] = "1"
-        env.setdefault("SPARK_GRAFT_PLAN_CACHE", "0")
         os.execve(sys.executable, [sys.executable, os.path.abspath(__file__), sf_dir, mem], env)
 
     from big_data_song_recommendation_spark.plans import QUERIES

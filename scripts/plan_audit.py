@@ -1,5 +1,5 @@
 """Physical-plan audit over every registered query: the .explain()
-discipline, mechanized. For each query (built FRESH via __wrapped__,
+discipline, mechanized. For each query (built under the
 bench-equivalent session conf) count the plan features that decide
 100 TB behavior — exchanges (shuffles), broadcasts, sorts, whole-stage
 codegen spans, scan pushdown — and flag the shapes that do not scale
@@ -60,7 +60,7 @@ def main() -> None:
     for name, fn in sorted(QUERIES.items()):
         try:
             plan = (
-                fn.__wrapped__(spark, SF_DIR)
+                fn(spark, SF_DIR)
                 ._jdf.queryExecution().executedPlan().toString()
             )
         except Exception as exc:  # pragma: no cover

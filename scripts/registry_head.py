@@ -128,7 +128,7 @@ def queries_for_lines(src: str, lines: list[int]) -> tuple[set[str], bool]:
                 owner = f
                 break
         if owner is None:
-            # module-level change (imports, constants, _PLAN_CACHE...):
+            # module-level change (imports, constants, registry...):
             # effects are global — caller must sweep everything
             fully_mapped = False
         elif owner.name in query_fns:

@@ -19,8 +19,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
-    spark = get_spark("tests", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # a per-run warehouse: managed tables a killed run left behind can
+    # no longer collide (LOCATION_ALREADY_EXISTS) with the next run's
+    spark = get_spark(
+        "tests",
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("warehouse"))
+        },
+    )
     yield spark
 
 

@@ -19,18 +19,10 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _fresh(spark, name):
-    """Build the query OUTSIDE the prepared-plan cache: plan-shape
-    assertions must see a plan compiled under the CURRENT session conf,
-    never one another test already built (or executed — an executed
-    cached DataFrame prints its AQE final plan)."""
-    return QUERIES[name].__wrapped__(spark, SF_DIR)
-
-
 def test_dimension_joins_broadcast(spark):
     """q03 (region→nation→customer→orders→lineitem): every dim join is
     a broadcast; the fact table is never shuffled for a lookup."""
-    plan = _plan(_fresh(spark, "q03_region_revenue"))
+    plan = _plan(QUERIES["q03_region_revenue"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -48,7 +40,7 @@ def test_filter_and_projection_pushdown(spark):
 
 
 def test_q01_scan_prunes_unused_columns(spark):
-    plan = _plan(_fresh(spark, "q01_pricing_summary"))
+    plan = _plan(QUERIES["q01_pricing_summary"](spark, SF_DIR))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     # 11-column lineitem: the pricing summary needs 7; the scan must
     # not read the join keys it never touches
@@ -63,27 +55,27 @@ def test_no_interpreted_folds_on_pair_joins(spark):
     per element and are banned from O(n²) paths
     (vectors.dot_expanded contract — 139.7s → 0.9s at sf0.1)."""
     for q in ("q16_knn_cosine", "q21_embedding_dup_pairs"):
-        plan = _plan(_fresh(spark, q))
+        plan = _plan(QUERIES[q](spark, SF_DIR))
         assert "zip_with" not in plan, f"{q}: interpreted fold on pair path"
 
 
 def test_knn_probe_side_broadcast(spark):
     """brute_force_knn broadcasts the probe set: one corpus pass."""
-    plan = _plan(_fresh(spark, "q16_knn_cosine"))
+    plan = _plan(QUERIES["q16_knn_cosine"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
 def test_exact_dedup_single_shuffle(spark):
     """q15 exact dedup: one hash-partition exchange (the window), no
     extra repartitions or joins."""
-    plan = _plan(_fresh(spark, "q15_doc_exact_dedup"))
+    plan = _plan(QUERIES["q15_doc_exact_dedup"](spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_q51_all_filters_pushed_to_scan(spark):
     """Q6-shape range predicates (date/discount/quantity) must all
     reach the parquet scan as PushedFilters."""
-    plan = _plan(_fresh(spark, "q51_forecast_revenue"))
+    plan = _plan(QUERIES["q51_forecast_revenue"](spark, SF_DIR))
     pushed = plan.split("PushedFilters:")[1].splitlines()[0]
     for frag in ("l_shipdate", "l_discount", "l_quantity"):
         assert frag in pushed, f"{frag} not pushed: {pushed}"
@@ -98,7 +90,7 @@ def test_tpch_suite_joins_never_shuffle_fact_for_dims(spark):
         "q56_bilateral_shipping",
         "q57_national_market_share",
     ):
-        plan = _plan(_fresh(spark, q))
+        plan = _plan(QUERIES[q](spark, SF_DIR))
         assert "BroadcastHashJoin" in plan, q
         assert "SortMergeJoin" not in plan, f"{q}: fact shuffled for a dim join"
         assert "CartesianProduct" not in plan, q
@@ -108,7 +100,7 @@ def test_q58_fact_filters_pushed_and_topk_never_global_sorts(spark):
     """TPC-H Q10 shape: both fact filters reach their scans, and the
     top-20 runs as TakeOrderedAndProject (per-partition heap + merge),
     never a global sort of the aggregate."""
-    plan = _plan(_fresh(spark, "q58_returned_item_revenue"))
+    plan = _plan(QUERIES["q58_returned_item_revenue"](spark, SF_DIR))
     assert "EqualTo(l_returnflag,R)" in plan
     assert "GreaterThanOrEqual(o_orderdate,1996-01-01" in plan
     assert "TakeOrderedAndProject" in plan
@@ -119,7 +111,7 @@ def test_q61_reduces_fact_before_touching_orders(spark):
     qualifying orders BEFORE the orders/customer joins — at 100 TB the
     per-order aggregate is the only full-fact shuffle. The qualifying
     set is then small enough that AQE broadcasts it into orders."""
-    plan = _plan(_fresh(spark, "q61_large_volume_customers"))
+    plan = _plan(QUERIES["q61_large_volume_customers"](spark, SF_DIR))
     agg_pos = plan.index("Exchange hashpartitioning(l_orderkey")
     join_pos = plan.index("Join")
     assert agg_pos > join_pos  # plan prints top-down: agg sits BELOW (inside) the join
@@ -129,7 +121,7 @@ def test_q61_reduces_fact_before_touching_orders(spark):
 def test_q62_disjunct_common_brand_filter_pushed(spark):
     """TPC-H Q19 shape: the brand disjunct common to both OR arms is
     pushed to the part scan; only per-arm residuals evaluate post-join."""
-    plan = _plan(_fresh(spark, "q62_brand_quantity_revenue"))
+    plan = _plan(QUERIES["q62_brand_quantity_revenue"](spark, SF_DIR))
     assert "In(p_brand, [Brand#19,Brand#4])" in plan or "In(p_brand, [Brand#4,Brand#19])" in plan
 
 
@@ -148,7 +140,7 @@ def test_runtime_bloom_filter_engages_when_dims_cannot_broadcast(spark):
     )
     try:
         def bloom(q):
-            opt = _fresh(spark, q)._jdf.queryExecution().optimizedPlan().toString()
+            opt = QUERIES[q](spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
             return "bloom_filter" in opt or "might_contain" in opt
 
         assert bloom("q55_local_supplier_volume")
@@ -279,5 +271,5 @@ def test_q130_single_orders_scan(spark):
     customer-month aggregate — one orders scan, not a second
     scan+groupBy+join (r6 rewrite). The cohort window partitions on the
     high-cardinality custkey, so no single-task funnel either."""
-    plan = _plan(_fresh(spark, "q130_cohort_ltv"))
+    plan = _plan(QUERIES["q130_cohort_ltv"](spark, SF_DIR))
     assert plan.count("FileScan parquet") == 1

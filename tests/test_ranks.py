@@ -212,8 +212,7 @@ def test_rewritten_queries_have_no_unpartitioned_rank_windows(spark):
         "q108_value_percent_rank",
     ):
         plan = (
-            QUERIES[q]
-            .__wrapped__(spark, SF_DIR)
+            QUERIES[q](spark, SF_DIR)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -227,8 +226,7 @@ def test_q115_no_fact_grain_window(spark):
     count table: no row_number at all, and its one cumulative window
     is priority-partitioned."""
     plan = (
-        QUERIES["q115_fulfillment_latency"]
-        .__wrapped__(spark, SF_DIR)
+        QUERIES["q115_fulfillment_latency"](spark, SF_DIR)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -275,8 +273,7 @@ def test_low_cardinality_rewrites_partition_on_salt_or_bucket(spark):
         ("q48_ntile_quartiles", "__rb0"),
     ):
         plan = (
-            QUERIES[q]
-            .__wrapped__(spark, SF_DIR)
+            QUERIES[q](spark, SF_DIR)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

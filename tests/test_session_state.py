@@ -13,7 +13,6 @@ import threading
 from pyspark import StorageLevel
 
 from big_data_song_recommendation_spark.plans import QUERIES
-from big_data_song_recommendation_spark.plans.queries import evict_plan_cache
 from big_data_song_recommendation_spark.session import (
     query_batch,
     release_query_state,
@@ -92,15 +91,6 @@ def test_concurrent_queries_with_scoped_release(spark):
         t.join()
     assert not errs, errs
     release_query_state(spark)
-
-
-def test_evict_plan_cache_scoped(spark):
-    QUERIES["q01_pricing_summary"](spark, SF_DIR)
-    QUERIES["q04_event_type_stats"](spark, SF_DIR)
-    n = evict_plan_cache(spark, names={"q01_pricing_summary"})
-    assert n == 1
-    n_rest = evict_plan_cache(spark)
-    assert n_rest >= 1
 
 
 def test_wait_for_idle_timeout_refuses_release(spark):

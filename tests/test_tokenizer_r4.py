@@ -52,7 +52,7 @@ def test_q67_parses_json_once(spark):
     predicate: the plan carries ONE json_tuple Generate and zero
     get_json_object calls (the measured 2× regression shape)."""
     plan = (
-        QUERIES["q67_decayed_confidence"].__wrapped__(spark, SF_DIR)
+        QUERIES["q67_decayed_confidence"](spark, SF_DIR)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("json_tuple") == 1
@@ -87,6 +87,16 @@ def test_expanded_norm_does_not_duplicate_array_cast(spark):
     # array cast in the projection is the O(dim²) duplication shape
     assert "as array<double>" not in plan
     assert "cast(nv" in plan  # element casts present (float input)
+
+
+def test_infer_dim_ignores_recycled_frame_id(spark, monkeypatch):
+    """A frame that reuses a dropped frame's id() must get its own
+    width, not the dropped frame's memoized one."""
+    monkeypatch.setattr(vectors, "id", lambda o: 7, raising=False)
+    two = spark.createDataFrame([([1.0, 2.0],)], "v array<double>")
+    three = spark.createDataFrame([([1.0, 2.0, 3.0],)], "v array<double>")
+    assert vectors.infer_dim(two, "v") == 2
+    assert vectors.infer_dim(three, "v") == 3
 
 
 def test_winnow_packed_pos_is_token_ordinal(spark):
