@@ -39,6 +39,8 @@ import re
 import sys
 import time
 
+from pyspark.sql import SparkSession
+
 from big_data_song_recommendation_spark.plans import QUERIES
 from big_data_song_recommendation_spark.session import (
     get_spark,
@@ -114,13 +116,21 @@ def _sized_split_bytes(largest: int) -> tuple[int, int]:
     return max_split, open_cost
 
 
-def main() -> None:
+def bench_session(
+    app_name: str = "bench", overrides: dict[str, str] | None = None
+) -> tuple[SparkSession, dict]:
+    """The bench session, sized to the input volume under SF_DIR.
+
+    Returns the session and its sizing as the bench line reports it
+    (``shuffle_partitions``, ``aqe``, ``max_split_bytes``). Scripts that
+    profile or audit the benched plans build their session here so
+    they cannot drift from the bench; ``overrides`` is applied last."""
     total_input, largest_input = _input_bytes()
     shuffle_partitions = _sized_shuffle_partitions(total_input)
     aqe = total_input >= AQE_MIN_INPUT_BYTES
     max_split, open_cost = _sized_split_bytes(largest_input)
     spark = get_spark(
-        "bench",
+        app_name,
         shuffle_partitions=shuffle_partitions,
         extra_conf={
             "spark.sql.adaptive.enabled": str(aqe).lower(),
@@ -131,17 +141,21 @@ def main() -> None:
             # py4j/RDD round trip + possible extra exchange) is pure
             # overhead here — skip it statically
             "spark.graft.widen.enabled": "false",
-            # the generated-class cache defaults to 100 entries; a
-            # 78-query suite compiles far more stages than that, so
-            # round-robin runs would evict and RECOMPILE every stage
-            # each round (measured: doc-pipeline queries doubled).
-            # Any many-query service wants this sized to its workload.
-            "spark.sql.codegen.cache.maxEntries": "5000",
+            **(overrides or {}),
         },
     )
-    # Warm the JVM/session so the first timed query doesn't pay startup:
-    # JIT the parquet reader/writer, hash-agg, broadcast-join, and window
-    # paths on throwaway data (never the benchmark inputs).
+    sizing = {
+        "shuffle_partitions": shuffle_partitions,
+        "aqe": aqe,
+        "max_split_bytes": max_split,
+    }
+    return spark, sizing
+
+
+def warm_up(spark: SparkSession) -> None:
+    """Warm the JVM/session so the first timed query doesn't pay startup:
+    JIT the parquet reader/writer, hash-agg, broadcast-join, and window
+    paths on throwaway data (never the benchmark inputs)."""
     import tempfile
 
     from pyspark.sql import Window
@@ -158,6 +172,11 @@ def main() -> None:
         w.withColumn(
             "r", F.row_number().over(Window.partitionBy("k").orderBy("id"))
         ).filter("r <= 3").collect()
+
+
+def main() -> None:
+    spark, sizing = bench_session()
+    warm_up(spark)
 
     # min-of-3 (was 2): this box's vCPU contention swings single-query
     # walls ±30-50% and hits the 32-thread Spark side far harder than
@@ -229,9 +248,7 @@ def main() -> None:
         "plan_cache": False,
         "state_release": "per_query_run",
         "bench_action": "noop",
-        "shuffle_partitions": shuffle_partitions,
-        "aqe": aqe,
-        "max_split_bytes": max_split,
+        **sizing,
     }
     if duck_total is not None:
         line["duck_total_s"] = duck_total

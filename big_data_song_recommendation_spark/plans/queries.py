@@ -35,32 +35,6 @@ def _revenue() -> F.Column:
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
-def _ordered(df: DataFrame, *cols) -> DataFrame:
-    """Presentation order hook for a BOUNDED final result (aggregate /
-    top-k / per-entity summary rows, not raw fact rows).
-
-    Round 13 (VERDICT r12 #6): a NO-OP by default. The sort here was
-    always cosmetic — the driver's correctness compare is
-    order-insensitive (it canonically sorts rows before hashing, as
-    does ``scripts/correctness_sweep.py``), and no result feeds a
-    ``limit``/``offset`` after this point (semantic sorts keep real
-    ``orderBy`` inside the queries). What the cosmetic sort cost: one
-    SinglePartition Exchange + sort stage per query — ~183 exchanges,
-    ~6-9 s suite-wide at sf0.1, and at cluster scale a needless
-    all-to-one funnel of every query's result. Guide §2.4 names "an
-    orderBy used only to make output deterministic" as the canonical
-    removable shuffle.
-
-    ``SPARK_GRAFT_PRESENTATION_SORT=1`` restores the r12 behavior
-    (single-partition total sort — TPC-H presentation-order fidelity
-    for human eyes; ``df.orderBy`` is deliberately not used: its
-    RangePartitioner sampling pass executes the entire child plan a
-    second time, measured +0.54 s on q22)."""
-    if os.environ.get("SPARK_GRAFT_PRESENTATION_SORT") == "1":
-        return df.repartition(1).sortWithinPartitions(*cols)
-    return df
-
-
 # ---------------------------------------------------------------------------
 # Relational core
 # ---------------------------------------------------------------------------
@@ -85,7 +59,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .transform(_ordered, "l_returnflag", "l_linestatus")
     )
 
 
@@ -186,7 +159,6 @@ def q03_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cust_orders").alias("n_orders"),
             F.count("*").alias("n_customers"),
         )
-        .transform(_ordered, "r_name", "n_name")
     )
 
 
@@ -205,7 +177,6 @@ def q04_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("value"), 2).alias("min_value"),
             F.round(F.max("value"), 2).alias("max_value"),
         )
-        .transform(_ordered, "event_type")
     )
 
 
@@ -226,9 +197,7 @@ def q05_top_events_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.desc("value"), F.asc("event_id")],
         3,
         salt_col=F.xxhash64("event_id"),
-    ).select("event_type", "event_id", "user_id", "value", "rnk").transform(
-        _ordered, "event_type", "rnk"
-    )
+    ).select("event_type", "event_id", "user_id", "value", "rnk")
 
 
 def q06_orders_page(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,7 +227,6 @@ def q07_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
-        .transform(_ordered, "c_custkey")
     )
 
 
@@ -270,7 +238,6 @@ def q08_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .select("c_custkey", "c_name", "c_acctbal")
-        .transform(_ordered, "c_custkey")
     )
 
 
@@ -285,7 +252,6 @@ def q09_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.round(F.avg("value"), 4).alias("avg_value"),
         )
-        .transform(_ordered, "rating")
     )
 
 
@@ -304,7 +270,6 @@ def q10_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("n_users"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
-        .transform(_ordered, "hour_ts")
     )
 
 
@@ -321,7 +286,6 @@ def q11_union_order_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         high.unionByName(recent)
         .groupBy("bucket", "o_orderstatus")
         .agg(F.count("*").alias("n"))
-        .transform(_ordered, "bucket", "o_orderstatus")
     )
 
 
@@ -340,7 +304,6 @@ def q12_part_type_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("p_retailprice"), 2).alias("avg_retail"),
             F.count("*").alias("n_items"),
         )
-        .transform(_ordered, "p_type")
     )
 
 
@@ -357,7 +320,6 @@ def q13_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").alias("max_k"),
             F.min("k").alias("min_k"),
         )
-        .transform(_ordered, "event_type")
     )
 
 
@@ -377,7 +339,6 @@ def q14_doc_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("n_chars"), 2).alias("avg_chars"),
             F.max("n_chars").alias("max_chars"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -395,7 +356,6 @@ def q15_doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fp",
             (F.col("rnk") == 1).alias("keep"),
         )
-        .transform(_ordered, "doc_id")
     )
 
 
@@ -433,7 +393,6 @@ def q16_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 5)
         .select("query_id", "neighbor_id", "neighbor_label", "sim", "rnk")
-        .transform(_ordered, "query_id", "rnk")
     )
 
 
@@ -445,7 +404,7 @@ def q17_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", k=3, threshold=0.5
-    ).transform(_ordered, "id_a", "id_b")
+    )
 
 
 def q18_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,7 +415,7 @@ def q18_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_signatures(
         docs, "doc_id", "text", num_hashes=8, k=3
-    ).transform(_ordered, "doc_id")
+    )
 
 
 def q19_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -464,7 +423,7 @@ def q19_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash(docs, "doc_id", "text", bits=16).transform(_ordered, "doc_id")
+    return dedup.simhash(docs, "doc_id", "text", bits=16)
 
 
 def q20_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,7 +437,7 @@ def q20_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", num_hashes=32, bands=8, k=3, verify_threshold=0.5
-    ).transform(_ordered, "id_a", "id_b")
+    )
 
 
 def q21_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -490,7 +449,7 @@ def q21_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return dedup.embedding_dup_pairs_blocked(
         emb, "vec_id", "embedding", threshold=0.4
-    ).transform(_ordered, "id_a", "id_b")
+    )
 
 
 def q22_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -503,7 +462,7 @@ def q22_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         scalars.stable_round(text.punct_ratio("text"), 4).alias("punct_ratio"),
         scalars.stable_round(text.stopword_ratio("text"), 4).alias("stopword_ratio"),
         text.quality_score("text").alias("quality"),
-    ).transform(_ordered, "doc_id")
+    )
 
 
 def q23_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,7 +473,6 @@ def q23_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("predicted", text.lang_id("text"))
         .groupBy("lang", "predicted")
         .agg(F.count("*").alias("n"))
-        .transform(_ordered, "lang", "predicted")
     )
 
 
@@ -535,7 +493,7 @@ def q24_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("running_spend"),
         F.row_number().over(w).alias("rn"),
-    ).transform(_ordered, "user_id", "rn")
+    )
 
 
 def q25_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -556,7 +514,6 @@ def q25_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_start"),
             F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("session_end"),
         )
-        .transform(_ordered, "user_id", "session_id")
     )
 
 
@@ -600,7 +557,6 @@ def q26_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cnt").alias("n_items"),
             F.grouping_id().alias("grp_id"),
         )
-        .transform(_ordered, "grp_id", "r_name", "n_name")
     )
 
 
@@ -616,7 +572,7 @@ def q27_daily_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return piv.select(
         "day", *[F.coalesce(F.col(t), F.lit(0)).alias(t) for t in types]
-    ).transform(_ordered, "day")
+    )
 
 
 def q28_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -652,7 +608,6 @@ def q28_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             disc(0.9).alias("p90_value"),
             F.max("n").alias("n"),
         )
-        .transform(_ordered, "event_type")
     )
 
 
@@ -673,7 +628,7 @@ def q29_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("purchase_ts"),
         F.date_format("asof_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_click_ts"),
-    ).transform(_ordered, "event_id")
+    )
 
 
 def q30_hash_attributes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -688,7 +643,6 @@ def q30_hash_attributes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.round(F.avg("p_retailprice"), 2).alias("avg_retail"),
         )
-        .transform(_ordered, "color")
     )
 
 
@@ -701,7 +655,6 @@ def q31_duration_format(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("dur", scalars.format_duration(ms))
         .groupBy("dur")
         .agg(F.count("*").alias("n"))
-        .transform(_ordered, "dur")
     )
 
 
@@ -721,7 +674,6 @@ def q32_cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "total",
         )
-        .transform(_ordered, "status", "priority")
     )
 
 
@@ -735,7 +687,7 @@ def q33_intersect_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     low = orders.filter(F.col("o_orderpriority") == "5-LOW").select(
         F.col("o_custkey").alias("custkey")
     )
-    return urgent.intersect(low).transform(_ordered, "custkey")
+    return urgent.intersect(low)
 
 
 def q34_except_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -748,7 +700,7 @@ def q34_except_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # subtract == EXCEPT DISTINCT (exceptAll would keep a customer whose
     # non-urgent order count merely exceeds their urgent count)
-    return all_c.subtract(urgent).transform(_ordered, "custkey")
+    return all_c.subtract(urgent)
 
 
 def q54_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,7 +758,6 @@ def q53_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("purchase_id").alias("attributed_purchases"),
             F.count("*").alias("click_pairs"),
         )
-        .transform(_ordered, "user_id")
     )
 
 
@@ -852,7 +803,6 @@ def q52_unpivot_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "metric_value",
         )
         .withColumn("metric_value", F.round(F.col("metric_value"), 2))
-        .transform(_ordered, "day", "metric")
     )
 
 
@@ -869,7 +819,6 @@ def q50_user_event_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join("types", ",").alias("event_types"),
             F.size("types").alias("n_types"),
         )
-        .transform(_ordered, "user_id")
     )
 
 
@@ -909,7 +858,6 @@ def q48_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("c_acctbal"), 2).alias("min_bal"),
             F.round(F.max("c_acctbal"), 2).alias("max_bal"),
         )
-        .transform(_ordered, "c_mktsegment", "quartile")
     )
 
 
@@ -926,7 +874,7 @@ def q49_first_last_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.last("event_type").over(wfull).alias("last_type"),
         (F.unix_timestamp("ts") - F.unix_timestamp(F.first("ts").over(wfull)))
         .alias("sec_since_first"),
-    ).transform(_ordered, "user_id", "event_id")
+    )
 
 
 def q36_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -949,7 +897,6 @@ def q36_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand", "size_bucket")
         .agg(F.count("*").alias("n_suppliers"))
         .filter(F.col("n_suppliers") >= 5)
-        .transform(_ordered, "p_brand", "size_bucket")
     )
 
 
@@ -966,7 +913,6 @@ def q37_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("n_orders")
         .agg(F.count("*").alias("n_customers"))
-        .transform(_ordered, "n_orders")
     )
 
 
@@ -1002,7 +948,6 @@ def q39_late_shipment_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count("*").alias("n_orders"))
-        .transform(_ordered, "o_orderpriority")
     )
 
 
@@ -1034,7 +979,6 @@ def q35_fuzzy_category_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("category"), F.col("category_match_tier").alias("tier")
         )
         .agg(F.count("*").alias("n"))
-        .transform(_ordered, "category", "tier")
     )
 
 
@@ -1053,7 +997,7 @@ def q44_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     media = multimodal.media_from_documents(docs)
-    return multimodal.decode_media(media).transform(_ordered, "doc_id")
+    return multimodal.decode_media(media)
 
 
 def q45_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1064,7 +1008,7 @@ def q45_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     media = multimodal.media_from_documents(docs)
-    return multimodal.sample_frames(media, every=7).transform(_ordered, "doc_id", "frame_index")
+    return multimodal.sample_frames(media, every=7)
 
 
 def q46_image_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,7 +1018,7 @@ def q46_image_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     media = multimodal.media_from_documents(docs)
-    return multimodal.resize_plan(media, max_w=256, max_h=256).transform(_ordered, "doc_id")
+    return multimodal.resize_plan(media, max_w=256, max_h=256)
 
 
 # ---------------------------------------------------------------------------
@@ -1115,9 +1059,7 @@ def q40_als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml import recommend
 
     users = _event_users(spark, sf_dir, 20)
-    return recommend.recommend_top_n_committed(spark, users, 5).transform(
-        _ordered, "user_id", "rnk"
-    )
+    return recommend.recommend_top_n_committed(spark, users, 5)
 
 
 def q41_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1134,7 +1076,6 @@ def q41_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_assign(emb, KM_CENTROIDS)
         .groupBy("cluster")
         .agg(F.count("*").alias("n"))
-        .transform(_ordered, F.desc("n"), F.asc("cluster"))
     )
 
 
@@ -1198,7 +1139,6 @@ def q42_tfidf_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.avg("score_micro") / F.lit(float(MICRO)), 2
             ).alias("avg_score"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -1218,7 +1158,7 @@ def q47_ivf_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") < 5)
     return similarity.ivf_knn_committed(
         emb, probes, IVF_CENTROIDS, k=5, nprobe=4
-    ).transform(_ordered, "query_id", "rnk")
+    )
 
 
 def q43_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1291,7 +1231,6 @@ def q43_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("score"), 6).alias("total"))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 5)
-        .transform(_ordered, "user_id", "rnk")
     )
 
 
@@ -1331,7 +1270,6 @@ def q55_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(F.round(F.sum(_revenue()), 2).alias("revenue"))
-        .transform(_ordered, F.desc("revenue"), F.asc("n_name"))
     )
 
 
@@ -1371,7 +1309,6 @@ def q56_bilateral_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").cast("long").alias("l_year"),
         )
         .agg(F.round(F.sum(_revenue()), 2).alias("revenue"))
-        .transform(_ordered, "supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -1412,7 +1349,6 @@ def q57_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mkt_share"),
             F.round(F.sum(vol), 2).alias("total_volume"),
         )
-        .transform(_ordered, "o_year")
     )
 
 
@@ -1478,7 +1414,6 @@ def q59_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("promo_pct"),
             F.round(F.sum(vol), 2).alias("revenue"),
         )
-        .transform(_ordered, "ship_month")
     )
 
 
@@ -1510,7 +1445,6 @@ def q60_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             F.round("total_revenue", 2).alias("total_revenue"),
         )
-        .transform(_ordered, "s_suppkey")
     )
 
 
@@ -1605,7 +1539,6 @@ def q63_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_custs"),
             F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
         )
-        .transform(_ordered, "n_name")
     )
 
 
@@ -1627,7 +1560,6 @@ def q65_grouping_sets_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "total_value",
         )
-        .transform(_ordered, "event_type", "hr")
     )
 
 
@@ -1658,7 +1590,6 @@ def q66_near_dup_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("__k").isNull(), 1).otherwise(0)).alias("n_dropped"),
             F.count("__k").alias("n_kept"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -1716,7 +1647,6 @@ def q68_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("pct_high"),
         )
-        .transform(_ordered, "event_type")
     )
 
 
@@ -1746,7 +1676,6 @@ def q64_token_budget_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 scalars.stable_round(F.col("bpe_tokens") / F.col("ws_tokens"), 4),
             ),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -1795,7 +1724,6 @@ def q69_incident_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 2
             ).alias("sum_value"),
         )
-        .transform(_ordered, "window_id")
     )
 
 
@@ -1808,7 +1736,7 @@ def q70_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quality import repetition_metrics
 
     docs = load_table(spark, sf_dir, "documents")
-    return repetition_metrics(docs).transform(_ordered, "doc_id")
+    return repetition_metrics(docs)
 
 
 def q71_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1822,7 +1750,7 @@ def q71_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     benchmark = docs.filter(F.col("doc_id") % 20 == 0)
-    return decontaminate(corpus, benchmark, k=5).transform(_ordered, "doc_id")
+    return decontaminate(corpus, benchmark, k=5)
 
 
 def q72_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1848,7 +1776,6 @@ def q72_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_sampled"),
             F.sum("doc_id").alias("id_checksum"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -1893,7 +1820,6 @@ def q73_keyword_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("tok").alias("token"),
             scalars.stable_round("s6", 4).alias("tfidf"),
         )
-        .transform(_ordered, "doc_id", "rank")
     )
 
 
@@ -1911,7 +1837,6 @@ def q74_winnow_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.winnow_shared_pairs(
             docs, "doc_id", "text", k=3, window=4, min_shared=2
         )
-        .transform(_ordered, "id_a", "id_b")
     )
 
 
@@ -1930,7 +1855,7 @@ def q75_srp_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") < 8)
     return similarity.srp_knn(
         emb, probes, id_col="vec_id", vec_col="embedding", planes=6, k=3
-    ).transform(_ordered, "query_id", "rnk")
+    )
 
 
 def q76_salted_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1945,7 +1870,7 @@ def q76_salted_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return skew.salted_distinct_count(
         ev, "event_type", "user_id", salts=32
-    ).transform(_ordered, "event_type")
+    )
 
 
 def q77_corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1981,7 +1906,7 @@ def q77_corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("n").desc(), F.col("bigram").asc()],
         10,
         salt_col=F.xxhash64("bigram"),
-    ).transform(_ordered, "lang", "rnk")
+    )
 
 
 def q78_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2030,7 +1955,6 @@ def q78_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("a.email") + F.col("a.ipv4") + F.col("a.phone")
             ).alias("n_residual"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -2058,7 +1982,7 @@ def q79_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("valid_from", "yyyy-MM-dd HH:mm:ss").alias("valid_from"),
         F.date_format("valid_to", "yyyy-MM-dd HH:mm:ss").alias("valid_to"),
         "is_current",
-    ).transform(_ordered, "user_id", "valid_from")
+    )
 
 
 def q80_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2105,7 +2029,6 @@ def q80_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bpe").alias("bpe_tokens"),
             F.sum("doc_id").alias("id_checksum"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -2133,7 +2056,7 @@ def q81_gap_filled_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket"),
         F.round("value", 2).alias("value"),
         "is_gap",
-    ).transform(_ordered, "user_id", "bucket")
+    )
 
 
 def q82_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2144,9 +2067,7 @@ def q82_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.funnel import funnel_counts
 
     ev = load_table(spark, sf_dir, "events")
-    return funnel_counts(ev, ["view", "click", "purchase"]).transform(
-        _ordered, "stage"
-    )
+    return funnel_counts(ev, ["view", "click", "purchase"])
 
 
 def q83_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2177,7 +2098,6 @@ def q83_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             "week_offset",
             "n_users",
         )
-        .transform(_ordered, "cohort_week", "week_offset")
     )
 
 
@@ -2210,7 +2130,6 @@ def q84_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_pruned_docs"
             ),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -2234,7 +2153,6 @@ def q85_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             scalars.stable_round(F.min("avg_logp"), 4).alias("min_logp"),
             scalars.stable_round(F.max("avg_logp"), 4).alias("max_logp"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -2249,7 +2167,7 @@ def q86_events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return profile_columns(
         ev, ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    ).transform(_ordered, "col_name")
+    )
 
 
 def q86b_events_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2308,7 +2226,6 @@ def q86b_events_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= F.lit(0.15)
             ).alias("within_rsd"),
         )
-        .transform(_ordered, "col_name")
     )
 
 
@@ -2346,7 +2263,6 @@ def q87_item_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("node").alias("item_id"),
             scalars.stable_round("rank", 6).alias("rank"),
         )
-        .transform(_ordered, "item_id")
     )
 
 
@@ -2371,7 +2287,6 @@ def q88_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_outliers"
             ),
         )
-        .transform(_ordered, "event_type")
     )
 
 
@@ -2392,7 +2307,6 @@ def q89_weighted_corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         weighted_sample(with_w, "lang", "doc_id", "n_tokens", k=10, seed="es")
         .select("lang", "doc_id", "n_tokens", "rnk")
-        .transform(_ordered, "lang", "rnk")
     )
 
 
@@ -2433,7 +2347,6 @@ def q91_rolling_user_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("spend_3d"),
             F.count("*").over(w).alias("n_3d"),
         )
-        .transform(_ordered, "user_id", "event_id")
     )
 
 
@@ -2469,7 +2382,6 @@ def q93_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").alias("n_tokens"),
             F.min("doc_id").alias("first_doc"),
         )
-        .transform(_ordered, "lang", "pack_id")
     )
 
 
@@ -2502,7 +2414,6 @@ def q94_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "canonical_quality"
             ),
         )
-        .transform(_ordered, "cluster")
     )
 
 
@@ -2523,7 +2434,6 @@ def q95_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         out.groupBy("lang", "verdict")
         .agg(F.count("*").alias("n"))
-        .transform(_ordered, "lang", "verdict")
     )
 
 
@@ -2573,7 +2483,6 @@ def q96_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("v"), 2).cast("double").alias("value_total"),
         )
         .crossJoin(F.broadcast(leaked))
-        .transform(_ordered, "split")
     )
 
 
@@ -2626,7 +2535,6 @@ def q97_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_distinct_bigrams") / F.col("n_bigrams"), 4
             ).alias("bigram_diversity"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -2639,9 +2547,7 @@ def q98_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.aggregates import equi_width_histogram
 
     orders = load_table(spark, sf_dir, "orders")
-    return equi_width_histogram(orders, "o_totalprice", bins=10).transform(
-        _ordered, "bin"
-    )
+    return equi_width_histogram(orders, "o_totalprice", bins=10)
 
 
 def q99_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2717,7 +2623,7 @@ def q101_daily_value_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("low", 4).alias("low"),
         F.round("close", 4).alias("close"),
         "n",
-    ).transform(_ordered, "event_type", "day")
+    )
 
 
 def q102_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2749,7 +2655,6 @@ def q102_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.sum("n_changed_cols").alias("changed_cols"),
         )
-        .transform(_ordered, "verdict")
     )
 
 
@@ -2763,7 +2668,7 @@ def q103_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return containment_pairs(
         docs, "doc_id", "text", k=3, threshold=0.5
-    ).transform(_ordered, "id_a", "id_b")
+    )
 
 
 def q104_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2790,7 +2695,7 @@ def q104_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     a = edge("lineitem->orders", li, "l_orderkey", orders, "o_orderkey")
     b = edge("orders->customer", orders, "o_custkey", cust, "c_custkey")
-    return a.unionByName(b).transform(_ordered, "fk_edge")
+    return a.unionByName(b)
 
 
 def q105_session_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2858,7 +2763,6 @@ def q106_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("node").alias("item_id"),
             scalars.stable_round("rank", 6).alias("rank"),
         )
-        .transform(_ordered, "item_id")
     )
 
 
@@ -2956,7 +2860,6 @@ def q108_value_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 4).alias("value"),
             scalars.stable_round("pct", 6).alias("pct"),
         )
-        .transform(_ordered, "event_type", "event_id")
     )
 
 
@@ -2992,7 +2895,6 @@ def q109_label_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
             scalars.stable_round(F.avg("d2"), 4).alias("mean_scatter"),
             scalars.stable_round(F.max("d2"), 4).alias("max_scatter"),
         )
-        .transform(_ordered, "label")
     )
 
 
@@ -3047,9 +2949,7 @@ def q111_daily_event_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("d"), F.min("d").over(wmin)).alias("x"),
         F.col("c").alias("y"),
     )
-    return linear_fit(pts, "x", "y", ["event_type"]).transform(
-        _ordered, "event_type"
-    )
+    return linear_fit(pts, "x", "y", ["event_type"])
 
 
 def q112_type_hour_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3084,7 +2984,6 @@ def q113_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         sizes.groupBy("size")
         .agg(F.count("*").alias("n_clusters"))
-        .transform(_ordered, "size")
     )
 
 
@@ -3125,7 +3024,6 @@ def q114_cross_source_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("novelty"),
         )
-        .transform(_ordered, "source")
     )
 
 
@@ -3184,7 +3082,6 @@ def q115_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             disc(0.5).alias("median_days"),
             disc(0.9).alias("p90_days"),
         )
-        .transform(_ordered, "o_orderpriority")
     )
 
 
@@ -3306,7 +3203,6 @@ def q117_revenue_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("cum_share"),
         )
-        .transform(_ordered, "decile")
     )
 
 
@@ -3344,7 +3240,7 @@ def q118_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cells.select(
         "d", "o", "obs_freq", "benford_freq",
         scalars.stable_round("__chi", 4).alias("chi_term"),
-    ).transform(_ordered, "d")
+    )
 
 
 def q119_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3380,7 +3276,6 @@ def q119_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_hits",
             scalars.stable_round(F.col("n_hits") / 3.0, 4).alias("recall_at_3"),
         )
-        .transform(_ordered, "query_id")
     )
 
 
@@ -3404,7 +3299,6 @@ def q120_activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             scalars.stable_round(F.col("n") / F.col("t"), 6).alias("share"),
         )
-        .transform(_ordered, "dow", "hr")
     )
 
 
@@ -3477,7 +3371,6 @@ def q121_nation_revenue_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("mom_growth"),
         )
-        .transform(_ordered, "n_name", "month")
     )
 
 
@@ -3515,7 +3408,7 @@ def q122_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s") / stride).cast("int").alias("chunk_idx"),
         F.size(chunk).alias("n_tokens"),
         F.md5(F.array_join(chunk, " ")).alias("chunk_hash"),
-    ).transform(_ordered, "doc_id", "chunk_idx")
+    )
 
 
 def q123_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3550,7 +3443,6 @@ def q123_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_hits",
             scalars.stable_round(F.col("n_hits") / 3.0, 4).alias("recall_at_3"),
         )
-        .transform(_ordered, "query_id")
     )
 
 
@@ -3625,7 +3517,6 @@ def q124_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("achieved_share"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -3744,7 +3635,7 @@ def q127_approx_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("p50_approx") >= F.col("lo"))
             & (F.col("p50_approx") <= F.col("hi"))
         ).alias("within_band"),
-    ).transform(_ordered, "event_type")
+    )
 
 
 def q128_orders_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3792,7 +3683,6 @@ def q128_orders_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_price"),
         )
-        .transform(_ordered, "action")
     )
 
 
@@ -3847,7 +3737,6 @@ def q129_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_customers"),
             F.round(F.sum("m"), 2).cast("double").alias("total_monetary"),
         )
-        .transform(_ordered, "rfm_code")
     )
 
 
@@ -3900,7 +3789,6 @@ def q130_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_active",
             F.round("cum_rev", 2).cast("double").alias("cum_revenue"),
         )
-        .transform(_ordered, "cohort", "month_index")
     )
 
 
@@ -3961,7 +3849,6 @@ def q132_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_kept",
             (F.col("n_events") - F.col("n_kept")).alias("n_dropped"),
         )
-        .transform(_ordered, "user_id", "event_type")
     )
 
 
@@ -3991,7 +3878,7 @@ def q133_status_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("valid_to", fmt).alias("valid_to"),
         "n_obs",
         "is_current",
-    ).transform(_ordered, "user_id", "version")
+    )
 
 
 def q134_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4010,7 +3897,7 @@ def q134_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return time_weighted_avg(
         ev, keys=["event_type", "day"], tiebreak="event_id"
-    ).transform(_ordered, "event_type", "day")
+    )
 
 
 def q135_semantic_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4025,7 +3912,7 @@ def q135_semantic_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings")
     return srp_balanced_sample(
         emb, planes=5, per_bucket=8
-    ).transform(_ordered, "bucket", "smp_rank")
+    )
 
 
 def q136_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4065,7 +3952,6 @@ def q136_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_value"),
         )
-        .transform(_ordered, "channel")
     )
 
 
@@ -4096,7 +3982,7 @@ def q137_expectation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("column").alias("column_name"),
         "metric",
         "passed",
-    ).transform(_ordered, "check_kind", "column_name")
+    )
 
 
 def q138_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4112,7 +3998,7 @@ def q138_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.select("vec_id").filter(F.col("vec_id") < 8)
     return srp_hard_negatives(
         emb, probes, planes=6, k=3
-    ).transform(_ordered, "anchor_id", "rnk")
+    )
 
 
 def q139_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4134,7 +4020,7 @@ def q139_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     return local_frame(
         spark, rows, "step int, left string, right string, merged string, pair_count long"
-    ).transform(_ordered, "step")
+    )
 
 
 def q140_ranking_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4172,9 +4058,7 @@ def q140_ranking_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "item")
         .agg(F.count("*").alias("rel"))
     )
-    return graded_ranking_metrics(cand, rel, k=10).transform(
-        _ordered, "user_id"
-    )
+    return graded_ranking_metrics(cand, rel, k=10)
 
 
 def q141_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4206,9 +4090,7 @@ def q141_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ref = tagged.filter(F.col("__us") < F.col("__mid"))
     cur = tagged.filter(F.col("__us") >= F.col("__mid"))
-    return psi_report(ref, cur, checkpoint=False).transform(
-        _ordered, "bin"
-    )
+    return psi_report(ref, cur, checkpoint=False)
 
 
 def q142_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4263,7 +4145,6 @@ def q142_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("bound_ok"),
         )
-        .transform(_ordered, "user_id")
     )
 
 
@@ -4282,7 +4163,7 @@ def q143_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return bm25_topk(
         docs, ["dup", "key", "vector"], id_col="doc_id", k=10
-    ).transform(_ordered, "doc_id")
+    )
 
 
 def q144_kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4373,7 +4254,6 @@ def q144_kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= 0.5 * F.col("exact_inter")
             ).alias("gate_ok"),
         )
-        .transform(_ordered, "type_a", "type_b")
     )
 
 
@@ -4389,9 +4269,7 @@ def q145_name_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import edit_distance_pairs
 
     part = load_table(spark, sf_dir, "part")
-    return edit_distance_pairs(part, "p_name", max_dist=2).transform(
-        _ordered, "name_a", "name_b"
-    )
+    return edit_distance_pairs(part, "p_name", max_dist=2)
 
 
 def q146_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4407,9 +4285,7 @@ def q146_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     ref = emb.filter(F.col("vec_id") % 2 == 0)
     cur = emb.filter(F.col("vec_id") % 2 != 0)
-    return embedding_centroid_drift(ref, cur, group=["label"]).transform(
-        _ordered, "label"
-    )
+    return embedding_centroid_drift(ref, cur, group=["label"])
 
 
 def q147_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4440,7 +4316,7 @@ def q147_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return rrf_fuse(
         [("bm25", bm25), ("quality", qual)], id_col="doc_id", top=10
-    ).transform(_ordered, "fused_rank")
+    )
 
 
 def q148_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4466,7 +4342,7 @@ def q148_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         group=["p_brand"],
         out="median_price",
         tot_out="total_qty",
-    ).transform(_ordered, "p_brand")
+    )
 
 
 def q149_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4484,7 +4360,7 @@ def q149_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return prefix_filter_jaccard_pairs(
         docs, "doc_id", "text", k=3, threshold_num=1, threshold_den=2
-    ).transform(_ordered, "id_a", "id_b")
+    )
 
 
 def q150_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4598,7 +4474,6 @@ def q151_html_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("extracted").cast("long").alias("n_chars_extracted"),
             "link_density_micro",
         )
-        .transform(_ordered, "doc_id")
     )
 
 
@@ -4669,7 +4544,6 @@ def q153_c4_line_cleaning(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_lines_kept=2,
         )
         .select("doc_id", "n_lines", "n_kept", "kept_doc", "clean_text")
-        .transform(_ordered, "doc_id")
     )
 
 
@@ -4725,7 +4599,7 @@ def q154_url_canonicalization(spark: SparkSession, sf_dir: str) -> DataFrame:
         h.alias("host"),
         registrable_domain(h).alias("domain"),
         canonical_url(F.col("url")).alias("canonical_url"),
-    ).transform(_ordered, "doc_id")
+    )
 
 
 def q155_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4771,7 +4645,6 @@ def q155_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_word_occurrences"),
             ).alias("fertility_micro"),
         )
-        .transform(_ordered, "lang")
     )
 
 
@@ -4788,9 +4661,7 @@ def q156_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import duplicated_spans
 
     docs = load_table(spark, sf_dir, "documents")
-    return duplicated_spans(docs, "doc_id", "text", k=8).transform(
-        _ordered, "doc_id"
-    )
+    return duplicated_spans(docs, "doc_id", "text", k=8)
 
 
 def q157_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4847,7 +4718,6 @@ def q157_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("est_median") <= F.col("p60"))
             ).alias("in_band"),
         )
-        .transform(_ordered, pri)
     )
 
 
@@ -4903,7 +4773,6 @@ def q158_domain_curation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_kept").alias("kept_lines"),
             F.sum("__chars").alias("clean_chars"),
         )
-        .transform(_ordered, "domain")
     )
 
 
@@ -4926,7 +4795,7 @@ def q159_sequence_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sequence_manifest(
         d, "lang", "doc_id", "n_tokens", budget=512
-    ).transform(_ordered, "lang", "seq_id", "doc_id")
+    )
 
 
 def q160_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4942,9 +4811,7 @@ def q160_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import remove_duplicated_spans
 
     docs = load_table(spark, sf_dir, "documents")
-    return remove_duplicated_spans(docs, "doc_id", "text", k=8).transform(
-        _ordered, "doc_id"
-    )
+    return remove_duplicated_spans(docs, "doc_id", "text", k=8)
 
 
 def q161_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4968,7 +4835,7 @@ def q161_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         QCLF_WEIGHTS_MICRO,
         QCLF_BIAS_MICRO,
         carry_cols=["lang"],
-    ).transform(_ordered, "doc_id")
+    )
 
 
 def q162_incremental_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5059,7 +4926,6 @@ def q162_incremental_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame
                 & (F.col("r_s") == F.col("i_s"))
             ).alias("retract_matches_initial"),
         )
-        .transform(_ordered, "l_returnflag")
     )
 
 
@@ -5106,7 +4972,7 @@ def q163_langid_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         agreement.alias("agreement_micro"),
         (agreement >= F.lit(950_000)).alias("gate_agreement"),
-    ).transform(_ordered, "lang", "pred_lang", "heur_lang")
+    )
 
 
 def q164_fertility_by_model_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5157,7 +5023,6 @@ def q164_fertility_by_model_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_word_occurrences"),
             ).alias("fertility_micro"),
         )
-        .transform(_ordered, "pred_lang")
     )
 
 
@@ -5223,7 +5088,6 @@ def q165_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "gate_no_worse"
             ),
         )
-        .transform(_ordered, "query_id")
     )
 
 
@@ -5265,7 +5129,6 @@ def q166_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.select("doc_id", page.alias("page")), text_col="page"
         )
         .select("doc_id", "n_lines", "n_kept_lines", "n_removed", "dedup_text")
-        .transform(_ordered, "doc_id")
     )
 
 
@@ -5297,7 +5160,7 @@ def q167_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return near_dup_pairs_vs_corpus(
         old, mutated.unionByName(mirror)
-    ).transform(_ordered, "probe_id", "corpus_id")
+    )
 
 
 def q168_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5363,7 +5226,6 @@ def q168_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "gate_no_worse"
             ),
         )
-        .transform(_ordered, "query_id")
     )
 
 
@@ -5396,7 +5258,6 @@ def q169_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
             "blocked_pattern",
             "kept_url",
         )
-        .transform(_ordered, "doc_id")
     )
 
 
@@ -5441,7 +5302,7 @@ def q170_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_chars_fixed"),
         "fixed_text",
-    ).transform(_ordered, "doc_id")
+    )
 
 
 #: q171's injected sentence — clean form here, mojibake'd by the same
@@ -5527,7 +5388,6 @@ def q171_full_front_door_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_dup_lines").alias("dup_lines_removed"),
             F.sum("__chars").alias("clean_chars"),
         )
-        .transform(_ordered, "domain")
     )
 
 
@@ -5579,7 +5439,6 @@ def q172_admission_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "probe_id", "corpus_id", "est_jaccard_micro",
             "exact_jaccard_micro",
         )
-        .transform(_ordered, "probe_id", "corpus_id")
     )
 
 
@@ -5633,7 +5492,6 @@ def q173_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "gate_sublinear", F.col("n_scanned") < F.col("n_corpus")
         )
-        .transform(_ordered, "query_id")
     )
 
 
@@ -5650,7 +5508,7 @@ def q174_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quality import lm_perplexity_scores
 
     docs = load_table(spark, sf_dir, "documents")
-    return lm_perplexity_scores(docs).transform(_ordered, "doc_id")
+    return lm_perplexity_scores(docs)
 
 
 def q175_residual_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5707,7 +5565,6 @@ def q175_residual_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_hits_res").over(w_all)
             >= F.sum("n_hits_raw").over(w_all),
         )
-        .transform(_ordered, "query_id")
     )
 
 
@@ -5788,7 +5645,6 @@ def q182_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("rank_lt") + 1 <= F.col("target") + F.col("slack"))
             ).alias("gate_rank_error"),
         )
-        .transform(_ordered, "pm")
     )
 
 
@@ -5883,7 +5739,6 @@ def q181_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gate_bounds"),
             "gate_complete",
         )
-        .transform(_ordered, "shard", "key")
     )
 
 
@@ -5947,7 +5802,7 @@ def q180_decontamination_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(smf, "semantic")
         .otherwise("clean")
         .alias("verdict"),
-    ).transform(_ordered, "doc_id")
+    )
 
 
 def q179_front_door_batch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5984,7 +5839,7 @@ def q179_front_door_batch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_dup_lines",
         "n_batch_dup_lines",
         F.length("text").cast("long").alias("clean_chars"),
-    ).transform(_ordered, "doc_id")
+    )
 
 
 def q178_corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6027,7 +5882,7 @@ def q178_corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_kept_lines",
         "n_removed",
         F.length("clean_text").cast("long").alias("clean_chars"),
-    ).transform(_ordered, "doc_id")
+    )
 
 
 def q177_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6058,7 +5913,7 @@ def q177_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     return semantic_decontaminate(
         emb, bench, threshold=0.999, planes=6
-    ).transform(_ordered, "vec_id")
+    )
 
 
 def q176_front_door_lm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6108,7 +5963,6 @@ def q176_front_door_lm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("lm_score_micro").alias("lm_score_sum"),
             F.sum("__chars").alias("clean_chars"),
         )
-        .transform(_ordered, "domain")
     )
 
 

@@ -23,25 +23,18 @@ SUB = [
     "q54_item_cooccurrence", "q61_large_volume_customers", "q70_repetition_quality",
     "q71_decontamination", "q73_keyword_tfidf", "q77_corpus_bigrams",
 ]
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def child(extra: dict) -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import SF_DIR, bench_session, warm_up
     from big_data_song_recommendation_spark.plans import QUERIES
-    from big_data_song_recommendation_spark.session import get_spark
 
-    spark = get_spark("ab_child", shuffle_partitions=8, extra_conf={
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.files.maxPartitionBytes": "338091",
-        "spark.sql.files.openCostInBytes": "64000",
-        "spark.graft.widen.enabled": "false",
-        **extra,
-    })
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark, _ = bench_session("ab_child", extra)
+    warm_up(spark)
     out = {}
     for n in SUB:
-        df = QUERIES[n](spark, SF)
+        df = QUERIES[n](spark, SF_DIR)
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         out[n] = time.perf_counter() - t0

@@ -13,15 +13,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402
-    AQE_MIN_INPUT_BYTES,
-    SF_DIR,
-    _input_bytes,
-    _sized_shuffle_partitions,
-    _sized_split_bytes,
-)
+from bench import SF_DIR, bench_session  # noqa: E402
 from big_data_song_recommendation_spark.plans import QUERIES  # noqa: E402
-from big_data_song_recommendation_spark.session import get_spark  # noqa: E402
 
 OUT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -37,20 +30,7 @@ def main() -> None:
     if not names:
         print(f"no queries match {prefixes}")
         sys.exit(2)
-    total_input, largest_input = _input_bytes()
-    max_split, open_cost = _sized_split_bytes(largest_input)
-    spark = get_spark(
-        "capture-plans",
-        shuffle_partitions=_sized_shuffle_partitions(total_input),
-        extra_conf={
-            "spark.sql.adaptive.enabled": str(
-                total_input >= AQE_MIN_INPUT_BYTES
-            ).lower(),
-            "spark.sql.files.maxPartitionBytes": str(max_split),
-            "spark.sql.files.openCostInBytes": str(open_cost),
-            "spark.graft.widen.enabled": "false",
-        },
-    )
+    spark, _ = bench_session("capture-plans")
     os.makedirs(OUT_DIR, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, SF_DIR)

@@ -16,27 +16,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _input_bytes, _sized_shuffle_partitions, _sized_split_bytes, AQE_MIN_INPUT_BYTES, SF_DIR  # noqa: E402
+from bench import SF_DIR, bench_session, warm_up  # noqa: E402
 from big_data_song_recommendation_spark.plans import QUERIES  # noqa: E402
-from big_data_song_recommendation_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     only = {a for a in sys.argv[1:]}
-    total_input, largest_input = _input_bytes()
-    max_split, open_cost = _sized_split_bytes(largest_input)
-    spark = get_spark(
-        "floor_probe",
-        shuffle_partitions=_sized_shuffle_partitions(total_input),
-        extra_conf={
-            "spark.sql.adaptive.enabled": str(total_input >= AQE_MIN_INPUT_BYTES).lower(),
-            "spark.sql.files.maxPartitionBytes": str(max_split),
-            "spark.sql.files.openCostInBytes": str(open_cost),
-            "spark.graft.widen.enabled": "false",
-        },
-    )
+    spark, _ = bench_session("floor_probe")
     sc = spark.sparkContext
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm_up(spark)
 
     rows = []
     for name, fn in sorted(QUERIES.items()):

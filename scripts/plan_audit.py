@@ -17,10 +17,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import SF_DIR, bench_session  # noqa: E402
 from big_data_song_recommendation_spark.plans.queries import QUERIES  # noqa: E402
-from big_data_song_recommendation_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def audit(plan: str) -> dict:
@@ -48,14 +46,7 @@ def audit(plan: str) -> dict:
 
 def main() -> None:
     n = sys.argv[1] if len(sys.argv) > 1 else "4"
-    spark = get_spark(
-        "plan_audit",
-        shuffle_partitions=8,
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.graft.widen.enabled": "false",
-        },
-    )
+    spark, _ = bench_session("plan_audit", {"spark.sql.adaptive.enabled": "false"})
     rows, flags = [], []
     for name, fn in sorted(QUERIES.items()):
         try:
@@ -78,7 +69,8 @@ def main() -> None:
         "Per-query physical-plan features, fresh-built under the bench",
         "session conf (AQE off so the STATIC plan is what's audited).",
         "`exch`=hash/range exchanges, `1p`=single-partition exchanges",
-        "(final presentation sorts), `bc`=broadcast exchanges,",
+        "(metadata-grain prefix-sum windows, sketch summaries and other",
+        "global aggregates), `bc`=broadcast exchanges,",
         "`wscg`=whole-stage codegen spans, `arrow`=Arrow-batched Python",
         "operators, `pyrow`=row-at-a-time Python (must be 0).",
         "",

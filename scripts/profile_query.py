@@ -17,15 +17,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402
-    AQE_MIN_INPUT_BYTES,
-    SF_DIR,
-    _input_bytes,
-    _sized_shuffle_partitions,
-    _sized_split_bytes,
-)
+from bench import SF_DIR, bench_session, warm_up  # noqa: E402
 from big_data_song_recommendation_spark.plans import QUERIES  # noqa: E402
-from big_data_song_recommendation_spark.session import get_spark  # noqa: E402
+from big_data_song_recommendation_spark.session import (  # noqa: E402
+    release_query_state,
+)
 
 
 def _stage_report(spark, min_ms: int = 50) -> list[str]:
@@ -74,50 +70,15 @@ def main() -> None:
     if not names:
         print(f"no queries match {args}")
         sys.exit(2)
-    total_input, largest_input = _input_bytes()
-    max_split, open_cost = _sized_split_bytes(largest_input)
-    spark = get_spark(
-        "profile-query",
-        shuffle_partitions=_sized_shuffle_partitions(total_input),
-        extra_conf={
-            "spark.sql.adaptive.enabled": str(
-                total_input >= AQE_MIN_INPUT_BYTES
-            ).lower(),
-            "spark.sql.files.maxPartitionBytes": str(max_split),
-            "spark.sql.files.openCostInBytes": str(open_cost),
-            "spark.graft.widen.enabled": "false",
-            "spark.sql.codegen.cache.maxEntries": "5000",
-            # the session factory disables the UI; the profiler needs
-            # the REST status API for per-stage attribution
-            "spark.ui.enabled": "true",
-        },
-    )
-    # same warmup as bench.py so JIT state is comparable
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    with tempfile.TemporaryDirectory() as d:
-        spark.range(100_000).selectExpr(
-            "id", "id % 7 AS k", "cast(id AS double) AS v"
-        ).write.mode("overwrite").parquet(f"{d}/warm")
-        wdf = spark.read.parquet(f"{d}/warm")
-        dim_ = wdf.groupBy("k").count()
-        wdf.join(F.broadcast(dim_), "k").groupBy("k").sum("v").collect()
-        wdf.withColumn(
-            "r", F.row_number().over(Window.partitionBy("k").orderBy("id"))
-        ).filter("r <= 3").collect()
+    # the session factory disables the UI; the profiler needs the
+    # REST status API for per-stage attribution
+    spark, _ = bench_session("profile-query", {"spark.ui.enabled": "true"})
+    warm_up(spark)  # same warmup as bench.py so JIT state is comparable
     # r13: mirror the honest bench protocol — REBUILD the plan per run
     # and release all cache/checkpoint blocks between runs, so no run
     # is served from a previous run's materialized state. build/exec
     # are reported per run; the bench's recorded number corresponds to
     # min(build_i + noop_i).
-    from big_data_song_recommendation_spark.session import (  # noqa: E402
-        release_query_state,
-    )
-
     for name in names:
         spark.sparkContext.setJobDescription(name)
         builds, walls = [], []

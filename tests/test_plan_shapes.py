@@ -49,6 +49,15 @@ def test_q01_scan_prunes_unused_columns(spark):
     assert "l_orderkey" not in read_schema
 
 
+def test_results_have_no_single_partition_funnel(spark):
+    """Query results carry no presentation order: no all-to-one
+    exchange gathers a bounded result just to sort it for display
+    (plans/r13/q01_before.txt and q22_before.txt show the funnel)."""
+    for q in ("q01_pricing_summary", "q22_doc_quality"):
+        plan = _plan(QUERIES[q](spark, SF_DIR))
+        assert "Exchange SinglePartition" not in plan, q
+
+
 def test_no_interpreted_folds_on_pair_joins(spark):
     """Pair-join similarity must be codegen arithmetic: Catalyst
     higher-order functions (aggregate/zip_with) evaluate interpreted

@@ -12,8 +12,10 @@ import threading
 
 from pyspark import StorageLevel
 
+from big_data_song_recommendation_spark import session
 from big_data_song_recommendation_spark.plans import QUERIES
 from big_data_song_recommendation_spark.session import (
+    driver_memory,
     query_batch,
     release_query_state,
     snapshot_persistent_rdds,
@@ -106,3 +108,23 @@ def test_wait_for_idle_timeout_refuses_release(spark):
             release_query_state(spark, wait_for_idle=True, timeout=0.2)
         assert _persistent_ids(spark) == pinned  # nothing was freed
     release_query_state(spark)
+
+
+def test_driver_memory_env_wins_else_capped_by_host(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert driver_memory() == "3g"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    page = 4096
+    for phys_gib in (1, 15.7, 64):
+        pages = int(phys_gib * (1 << 30)) // page
+        monkeypatch.setattr(
+            session.os,
+            "sysconf",
+            lambda key, pages=pages: {"SC_PHYS_PAGES": pages, "SC_PAGE_SIZE": page}[key],
+        )
+        mem = driver_memory()
+        assert mem.endswith("m")
+        mib = int(mem[:-1])
+        assert 0 < mib <= 16 * 1024
+        assert mib * (1 << 20) <= pages * page
+    assert mib == 16 * 1024  # a 64 GiB host gets the 16 GiB cap
