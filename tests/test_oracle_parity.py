@@ -7,6 +7,8 @@ import pytest
 
 from big_data_song_recommendation_spark.plans import ORACLES, QUERIES
 
+from oracle_sweep import FIELDS, check
+
 from .conftest import SF_DIR, assert_matches_oracle
 
 
@@ -41,3 +43,19 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["r_name", "n_name", "revenue", "n_orders", "n_customers"]
+
+
+def test_oracle_sweep_check_records_and_releases(spark, duck):
+    # the sweep's per-query check, in this session: a six-field driver
+    # record, hash-green, nothing left pinned after its release
+    for name in ("q01_pricing_summary", "q22_doc_quality"):
+        rec, diff, left = check(spark, duck, QUERIES[name], SF_DIR, ORACLES[name])
+        assert tuple(rec) == FIELDS
+        assert rec["hash_match"] is True, f"{name}: {diff}"
+        assert left == 0
+    # a wrong oracle (same text, no rows) must fail rows and hash
+    q01 = "q01_pricing_summary"
+    rec, diff, _ = check(spark, duck, QUERIES[q01], SF_DIR, ORACLES[q01] + " LIMIT 0")
+    assert rec["rows_match"] is False and rec["hash_match"] is False
+    assert rec["spark_rows"] > 0 and rec["oracle_rows"] == 0 and rec["err"] is None
+    assert diff.startswith("row count")
