@@ -193,12 +193,17 @@ def signatures_from_sets(
     """One md5 per shingle + ``num_hashes`` affine derivations
     ``h_i = (a_i·base + b_i) mod p`` — the production MinHash layout
     (N md5 evaluations per row would N× the hash cost for no recall
-    gain). All arithmetic stays in int64: a_i·base < 2^38."""
-    base = hash60(F.col("sh")) % MINHASH_PRIME
-    aggs = []
-    for i in range(num_hashes):
-        a, b = _affine(i)
-        aggs.append(F.min((F.lit(a) * base + F.lit(b)) % MINHASH_PRIME).alias(f"h{i}"))
+    gain). All arithmetic stays in int64: a_i·base < 2^38. Each
+    aggregate is one parsed SQL expression (the :func:`hash60` form),
+    one py4j call instead of one per Column operator."""
+    base = (
+        f"CAST(conv(substring(md5(sh), 1, {HASH_HEX_DIGITS}), 16, 10) AS BIGINT)"
+        f" % {MINHASH_PRIME}"
+    )
+    aggs = [
+        F.expr(f"min(({a} * ({base}) + {b}) % {MINHASH_PRIME}) AS h{i}")
+        for i, (a, b) in enumerate(map(_affine, range(num_hashes)))
+    ]
     return sets.groupBy(F.col("sid").alias(id_col)).agg(*aggs)
 
 
@@ -1517,18 +1522,21 @@ def _band_key_rows(sig: DataFrame, id_col: str, *, num_hashes: int, bands: int) 
     in-session :func:`minhash_lsh_pairs` keeps band separate because
     its self-join wants the struct; the serving layout wants one
     bucketable key)."""
-    r = num_hashes // bands
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                ",", F.lit(b), *[F.col(f"h{b * r + j}") for j in range(r)]
-            )
-        ).alias(f"k{b}")
-        for b in range(bands)
-    ]
-    return sig.select(
-        F.col(id_col).alias("sid"), F.explode(F.array(*band_cols)).alias("key")
+    return sig.selectExpr(
+        f"`{id_col}` AS sid",
+        f"explode({_band_keys_sql(num_hashes, bands)}) AS key",
     )
+
+
+def _band_keys_sql(num_hashes: int, bands: int) -> str:
+    """SQL for the array of a signature row's ``bands`` band keys."""
+    r = num_hashes // bands
+    return "array(" + ", ".join(
+        "md5(concat_ws(',', "
+        + ", ".join([str(b)] + [f"h{b * r + j}" for j in range(r)])
+        + "))"
+        for b in range(bands)
+    ) + ")"
 
 
 #: per-(session, index-name) metadata memo — one immutable row per
@@ -1637,19 +1645,23 @@ def near_dup_probe(
     (integer micro-units: exact arithmetic, cross-engine stable).
 
     Plan shape: the probe batch is shingled and signed with the META
-    row's family (never the caller's guess), its band rows join the
-    bands table on the single md5 key — the corpus side is bucketed on
-    it, so only the PROBE side shuffles — and the agreement re-rank
-    joins stored signatures by id. Per-probe work ∝ probe batch +
-    collided band rows; the corpus is never re-shingled. When the
-    batch's distinct band-key count is ≤ ``max_pushdown_keys`` (an
+    row's family (never the caller's guess), read through the
+    per-session memo that a same-name rebuild drops. In the admission
+    form one build-time lookup job collects each probe's signature and
+    band keys, for at most ``max_pushdown_keys // bands`` probes (an
     admission micro-batch: batch × bands keys, the BM25 term-list
-    grain), the keys are collected and pushed as an IN filter, turning
-    the bands read into a bucket-pruned, sorted-key-skipped scan —
-    per-batch IO ∝ matched band rows, independent of corpus size (the
-    ``admission`` scale probe measures this flat). Set it to ``None``
-    for bulk backfills, where the full bucketed join is the right
-    shape.
+    grain), and the action binds them as literals
+    (:func:`_near_dup_bound`): the keys become an IN filter, turning
+    the bands read into a bucket-pruned, sorted-key-skipped scan whose
+    IO ∝ matched band rows (the ``admission`` scale probe measures it
+    flat), and the candidate pairs join the stored signatures by id in
+    the same job. The signatures read still scans all of
+    ``{name}_sigs``. A bigger batch, or ``max_pushdown_keys=None`` for
+    bulk backfills, takes the bulk form: its band rows join the bands
+    table on the single md5 key — the corpus side is bucketed on it,
+    so only the PROBE side shuffles — and the agreement re-rank joins
+    stored signatures by id. Either way the corpus is never
+    re-shingled, and both forms share :func:`_mh_estimate`.
 
     The estimate is the ADMISSION grain (gate at ingest, the
     streaming.CurationSink use); for an exact-Jaccard verdict feed the
@@ -1657,49 +1669,114 @@ def near_dup_probe(
     join — the q20 two-tier discipline.
     """
     spark = new_docs.sparkSession
-    # fresh read (not the probe memo): merging on a stale meta for a
-    # rebuilt same-name index would mix hash families
-    meta = _mh_meta(spark, name, fresh=True)
-    idc, nh = meta["id_col"], int(meta["num_hashes"])
+    # the per-session memo: build_minhash_index drops it on a rebuild,
+    # so a probe never signs with a replaced index's hash family
+    meta = _mh_meta(spark, name)
+    idc, nh, bands = meta["id_col"], int(meta["num_hashes"]), int(meta["bands"])
     if idc not in new_docs.columns:
         raise ValueError(f"near_dup_probe: probe batch lacks id col {idc!r}")
     sig_p = minhash_signatures(
         new_docs, idc, text_col, num_hashes=nh, k=int(meta["k"])
     )
-    if cut_lineage:
-        # two consumers (band keys + agreement) — cut once. Callers in
-        # LONG-LIVED processes (the streaming sink) pass False: each
-        # localCheckpoint pins executor blocks until the driver GCs
-        # the DataFrame, which accumulates across micro-batches; a
-        # micro-batch recomputing its tiny signature pipeline twice is
-        # the cheaper steady state (measured in the gated soak).
-        sig_p = sig_p.localCheckpoint(eager=False)
-    bands_p = _band_key_rows(
-        sig_p, idc, num_hashes=nh, bands=int(meta["bands"])
-    ).select(F.col("sid").alias(probe_id_out), "key")
     bands_c = spark.table(f"{name}_bands")
+    sig_c = spark.table(f"{name}_sigs")
+    out = dict(
+        threshold_micro=threshold_micro,
+        probe_id_out=probe_id_out,
+        corpus_id_out=corpus_id_out,
+    )
     if max_pushdown_keys:
-        keys = [
-            r["key"]
-            for r in bands_p.select("key")
-            .distinct()
-            .limit(int(max_pushdown_keys) + 1)
-            .collect()
-        ]
-        if len(keys) <= int(max_pushdown_keys):
-            # bounded driver grain (batch × bands distinct keys); the
-            # localCheckpoint above means the signature pipeline ran
-            # once — the join below reuses the materialized slice
-            bands_c = bands_c.filter(
-                F.col("key").isin(keys) if keys else F.lit(False)
+        # the request's one build-time job: at most cap + 1 probe
+        # signatures with their band keys. One partition lets the
+        # collect's own limit finish in one job; a limit operator would
+        # instead compile its stage anew on every call (each one
+        # generates a counter of its own into the code)
+        cap = int(max_pushdown_keys) // bands
+        probes = (
+            sig_p.selectExpr(
+                f"`{idc}` AS id",
+                "named_struct("
+                + ", ".join(f"'h{i}', h{i}" for i in range(nh))
+                + ") AS p",
+                f"{_band_keys_sql(nh, bands)} AS keys",
             )
+            .coalesce(1)
+            .limit(cap + 1)
+            .collect()
+        )
+        if len(probes) <= cap:
+            id_t = new_docs.schema[idc].dataType.simpleString()
+            return _near_dup_bound(probes, bands_c, sig_c, idc, id_t, nh, **out)
+    if cut_lineage:
+        # bulk form: two consumers (band keys + agreement) — cut
+        # once. Callers in LONG-LIVED processes (the streaming sink)
+        # pass False: each localCheckpoint pins executor blocks until
+        # the driver GCs the DataFrame, which accumulates across
+        # micro-batches; a micro-batch recomputing its tiny signature
+        # pipeline twice is the cheaper steady state (measured in the
+        # gated soak).
+        sig_p = sig_p.localCheckpoint(eager=False)
+    bands_p = _band_key_rows(sig_p, idc, num_hashes=nh, bands=bands).select(
+        F.col("sid").alias(probe_id_out), "key"
+    )
     return _mh_agreement_pairs(
-        bands_p,
-        sig_p,
-        bands_c,
-        spark.table(f"{name}_sigs"),
-        idc=idc,
-        nh=nh,
+        bands_p, sig_p, bands_c, sig_c, idc=idc, nh=nh, **out
+    )
+
+
+def _near_dup_bound(
+    probes: list,
+    bands_c: DataFrame,
+    sig_c: DataFrame,
+    idc: str,
+    id_t: str,
+    nh: int,
+    *,
+    threshold_micro: int,
+    probe_id_out: str,
+    corpus_id_out: str,
+) -> DataFrame:
+    """The admission form of :func:`near_dup_probe`: the probe batch's
+    collected signatures and band keys (``probes``: rows of (id, p,
+    keys)) bind into the action as literals. The band read is
+    IN-filtered on the keys (bucket-pruned, pushed to parquet), each
+    band row picks up its probes from a key-keyed map, and each
+    candidate pair its probe signature ``p`` before the stored
+    signatures join; :func:`_mh_estimate` then scores the pairs as it
+    does in-session."""
+    from .similarity import _bind, _in_sql
+
+    by_key: dict = {}
+    sigs: dict = {}
+    for r in probes:
+        for key in r["keys"]:
+            by_key.setdefault(key, []).append({probe_id_out: r["id"]})
+        sigs[r["id"]] = [{"p": r["p"].asDict()}]
+    cand = (
+        _bind(
+            bands_c.filter(_in_sql("key", sorted(by_key))),
+            "key",
+            by_key,
+            {probe_id_out: id_t},
+            # a key may be any number of probes' key: the Generate also
+            # keeps the band read on its bucketed scan when it selects
+            # every bucket
+            explode=True,
+        )
+        .select(probe_id_out, F.col(idc).alias(corpus_id_out))
+        .distinct()
+    )
+    p_t = "struct<" + ",".join(f"h{i}:bigint" for i in range(nh)) + ">"
+    # shuffled, not broadcast: a broadcast of either side would be a
+    # job of its own
+    pairs = (
+        _bind(cand, probe_id_out, sigs, {"p": p_t})
+        .hint("shuffle_hash")
+        .join(sig_c.alias("c"), F.col(corpus_id_out) == F.col(f"c.{idc}"))
+    )
+    return _mh_estimate(
+        pairs,
+        nh,
         threshold_micro=threshold_micro,
         probe_id_out=probe_id_out,
         corpus_id_out=corpus_id_out,
@@ -1718,10 +1795,12 @@ def _mh_agreement_pairs(
     probe_id_out: str,
     corpus_id_out: str,
 ) -> DataFrame:
-    """Shared probe tail (band-key candidates → signature-agreement
-    estimate): :func:`near_dup_probe` feeds it the persisted tables,
-    :func:`near_dup_pairs_vs_corpus` the in-session frames — one
-    code path, so indexed == in-session holds by construction (and is
+    """Band-key candidate pairs joined to both signature frames, then
+    the shared :func:`_mh_estimate`: :func:`near_dup_pairs_vs_corpus`
+    and :func:`admission_two_tier` feed it in-session frames, and the
+    bulk form of :func:`near_dup_probe` the persisted tables; its
+    admission form binds the probe side as literals and feeds the same
+    estimate, so indexed == in-session holds by construction (and is
     test-pinned). ``bands_p`` carries (``probe_id_out``, key); the
     corpus frames carry the index id column ``idc``."""
     cand = (
@@ -1729,26 +1808,40 @@ def _mh_agreement_pairs(
         .select(probe_id_out, F.col(idc).alias(corpus_id_out))
         .distinct()
     )
-    agree = sum(
-        (F.col(f"p.h{i}") == F.col(f"c.h{i}")).cast("long") for i in range(nh)
+    pairs = cand.join(
+        sig_p.alias("p"),
+        F.col(probe_id_out) == F.col(f"p.{idc}"),
+    ).join(sig_c.alias("c"), F.col(corpus_id_out) == F.col(f"c.{idc}"))
+    return _mh_estimate(
+        pairs,
+        nh,
+        threshold_micro=threshold_micro,
+        probe_id_out=probe_id_out,
+        corpus_id_out=corpus_id_out,
     )
+
+
+def _mh_estimate(
+    pairs: DataFrame,
+    nh: int,
+    *,
+    threshold_micro: int,
+    probe_id_out: str,
+    corpus_id_out: str,
+) -> DataFrame:
+    """Signature-agreement estimate of candidate pairs whose probe and
+    corpus hashes resolve as ``p.h{i}`` and ``c.h{i}`` (frame aliases
+    in-session, a bound struct ``p`` in the admission form): the
+    integer micro-unit Jaccard estimate, kept when it clears
+    ``threshold_micro``. The agreement is one parsed expression; its
+    ``+ 0`` after the first term is the start value of the Column
+    ``sum`` it replaced, so existing plans are unchanged."""
+    terms = [f"CAST((p.h{i} = c.h{i}) AS BIGINT)" for i in range(nh)]
+    agree = " + ".join([f"{terms[0]} + 0", *terms[1:]])
     est = F.expr(f"CAST((__agree * 1000000) DIV {nh} AS BIGINT)")
     return (
-        cand.join(
-            sig_p.alias("p"),
-            F.col(probe_id_out) == F.col(f"p.{idc}"),
-        )
-        .join(sig_c.alias("c"), F.col(corpus_id_out) == F.col(f"c.{idc}"))
-        .select(
-            probe_id_out,
-            corpus_id_out,
-            agree.alias("__agree"),
-        )
-        .select(
-            probe_id_out,
-            corpus_id_out,
-            est.alias("est_jaccard_micro"),
-        )
+        pairs.select(probe_id_out, corpus_id_out, F.expr(agree).alias("__agree"))
+        .select(probe_id_out, corpus_id_out, est.alias("est_jaccard_micro"))
         .filter(F.col("est_jaccard_micro") >= int(threshold_micro))
     )
 
@@ -1833,7 +1926,9 @@ def merge_minhash_index(
             raise RuntimeError(
                 f"merge_minhash_index: {t!r} missing — build_minhash_index first"
             )
-    meta = _mh_meta(spark, name)
+    # fresh read (not the probe memo): merging on a stale meta for a
+    # rebuilt same-name index would mix hash families
+    meta = _mh_meta(spark, name, fresh=True)
     idc, nh = meta["id_col"], int(meta["num_hashes"])
     if idempotent:
         delta_docs = delta_docs.join(

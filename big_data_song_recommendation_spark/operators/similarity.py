@@ -241,8 +241,9 @@ def _pq_probe_luts(
     subvector m, centroid c⟩`` in micro² int64 — a per-PROBE
     O(M·K·d) projection in the xq-bound small-tree form
     (:func:`_bind_xq`), materialized at the broadcast exchange before
-    any pair joins read it. Shared by :func:`pq_adc_topk`,
-    :func:`ivf_pq_topk`, and :func:`ivfpq_topk_indexed`."""
+    any pair joins read it. Shared by :func:`pq_adc_topk` and the
+    in-session IVF+PQ searches (:func:`ivfpq_topk_indexed` computes
+    the same tables driver-side)."""
     for m in range(m_sub):
         p = p.withColumn(f"__cb{m}", _int_array_lit(books[m]))
     luts = ", ".join(
@@ -370,17 +371,24 @@ def _exact_rerank(
     p = probes.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     ).withColumn("qn", F.sqrt(vectors.sq_norm_expanded("qv", dim)))
-    sim = vectors.dot_expanded("qv", "nv", dim) / (F.col("qn") * F.col("nn"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
+    return _cosine_topk(
+        cand.join(c, "neighbor_id").join(F.broadcast(p), "query_id"), dim, k
     )
+
+
+def _cosine_topk(pairs: DataFrame, dim: int, k: int, *keep: str) -> DataFrame:
+    """Exact-cosine top-``k`` per query over candidate pairs carrying
+    (query_id, qv, qn, neighbor_id, nv, nn): the one score+rank of the
+    SRP, PQ and IVF+PQ searches, in-session and indexed alike, so an
+    indexed request returns the in-session rows by construction.
+    Output: (query_id, neighbor_id, sim, rnk, *keep)."""
+    sim = vectors.dot_expanded("qv", "nv", dim) / (F.col("qn") * F.col("nn"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(p), "query_id")
-        .withColumn("sim", F.round(sim, 6))
+        pairs.withColumn("sim", F.round(sim, 6))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk")
+        .select("query_id", "neighbor_id", "sim", "rnk", *keep)
     )
 
 
@@ -809,26 +817,44 @@ def _ivfpq_tail(
     exclude_self: bool,
     adc_offset_col: str | None = None,
 ) -> DataFrame:
-    """Shared ADC-scan + exact-rerank tail of :func:`ivf_pq_topk` and
-    :func:`ivfpq_topk_indexed` — one implementation, so the persisted
-    index serves IDENTICAL rows by construction (the _srp_rerank
-    discipline). ``enc``: (neighbor_id, cluster, codes); ``routed``:
-    (query_id, cluster); ``p``: probe LUTs (query_id, __lut*);
+    """In-session tail of :func:`ivf_pq_topk`, :func:`ivf_pq_residual_topk`
+    and :func:`ivf_pq_compare`: the routed-cell joins that make the
+    candidate pairs, then the shared :func:`_ivfpq_adc_topk` and
+    :func:`_cosine_topk` that :func:`ivfpq_topk_indexed` also runs.
+    ``enc``: (neighbor_id, cluster, codes); ``routed``: (query_id,
+    cluster[, adc_offset_col]); ``p``: probe LUTs (query_id, __luts);
     ``pv``/``c``: (query_id, qv, qn) / (neighbor_id, nv, nn)."""
     cond = (
         F.col("neighbor_id") != F.col("query_id")
         if exclude_self
         else F.lit(True)
     )
+    pairs = (
+        enc.join(F.broadcast(routed), "cluster")
+        .filter(cond)
+        .join(F.broadcast(p), "query_id")
+    )
+    cand = _ivfpq_adc_topk(pairs, m_sub, candidates, adc_offset_col)
+    return _cosine_topk(
+        cand.join(c, "neighbor_id").join(F.broadcast(pv), "query_id"),
+        dim, k, "n_scanned",
+    )
+
+
+def _ivfpq_adc_topk(
+    pairs: DataFrame, m_sub: int, candidates: int, adc_offset_col: str | None
+) -> DataFrame:
+    """ADC stage of the IVF+PQ search: score each (query_id,
+    neighbor_id, codes, __luts[, adc_offset_col]) pair by its M table
+    lookups (plus the residual offset), keep each query's top
+    ``candidates`` and count the pairs it scanned. Output: (query_id,
+    neighbor_id, n_scanned)."""
     w_all = Window.partitionBy("query_id")
     w_adc = Window.partitionBy("query_id").orderBy(
         F.desc("__adc"), F.asc("neighbor_id")
     )
-    cand = (
-        enc.join(F.broadcast(routed), "cluster")
-        .filter(cond)
-        .join(F.broadcast(p), "query_id")
-        .withColumn(
+    return (
+        pairs.withColumn(
             "__adc",
             _pq_adc_score(m_sub) + F.col(adc_offset_col)
             if adc_offset_col
@@ -838,16 +864,6 @@ def _ivfpq_tail(
         .withColumn("__ark", F.row_number().over(w_adc))
         .filter(F.col("__ark") <= candidates)
         .select("query_id", "neighbor_id", "n_scanned")
-    )
-    sim = vectors.dot_expanded("qv", "nv", dim) / (F.col("qn") * F.col("nn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(pv), "query_id")
-        .withColumn("sim", F.round(sim, 6))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk", "n_scanned")
     )
 
 
@@ -1567,7 +1583,10 @@ def srp_knn(
         F.col("n").alias("nn"),
         "bucket",
     )
-    return _srp_rerank(p, c, dim, k)
+    pairs = c.join(F.broadcast(p), "bucket").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+    return _cosine_topk(pairs, dim, k)
 
 
 def _hamming1_buckets(planes: int, col: str = "bucket") -> Column:
@@ -1660,24 +1679,6 @@ def srp_knn_compare(
     return _arm(cand.filter(F.col("__single"))), _arm(cand)
 
 
-def _srp_rerank(p: DataFrame, c: DataFrame, dim: int, k: int) -> DataFrame:
-    """Exact-cosine re-rank of bucket-joined SRP candidates — the
-    shared tail of :func:`srp_knn` and :func:`srp_knn_indexed`, so the
-    persisted-index server returns identical neighbors by
-    construction. ``p``: (query_id, qv, qn, bucket); ``c``:
-    (neighbor_id, nv, nn, bucket)."""
-    sim = vectors.dot_expanded("qv", "nv", dim) / (F.col("qn") * F.col("nn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        c.join(F.broadcast(p), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("sim", F.round(sim, 6))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
-
-
 def srp_hard_negatives(
     corpus: DataFrame,
     probes: DataFrame,
@@ -1725,23 +1726,20 @@ def srp_hard_negatives(
         F.col("lbl").alias("negative_label"),
         "bucket",
     )
-    return _srp_negatives_rerank(p, c, dim, k)
+    return _srp_negatives_rerank(c.join(F.broadcast(p), "bucket"), dim, k)
 
 
-def _srp_negatives_rerank(
-    p: DataFrame, c: DataFrame, dim: int, k: int
-) -> DataFrame:
-    """Label-aware re-rank tail shared by :func:`srp_hard_negatives`
-    and :func:`srp_hard_negatives_indexed`. ``p``: (anchor_id, qv, qn,
-    anchor_label, bucket); ``c``: (negative_id, nv, nn,
-    negative_label, bucket)."""
+def _srp_negatives_rerank(pairs: DataFrame, dim: int, k: int) -> DataFrame:
+    """Label-aware score+rank shared by :func:`srp_hard_negatives`
+    (bucket-joined pairs) and :func:`srp_hard_negatives_indexed`
+    (literal-bound pairs). ``pairs``: (anchor_id, qv, qn,
+    anchor_label, negative_id, nv, nn, negative_label)."""
     sim = vectors.dot_expanded("qv", "nv", dim) / (F.col("qn") * F.col("nn"))
     w = Window.partitionBy("anchor_id").orderBy(
         F.desc("sim"), F.asc("negative_id")
     )
     return (
-        c.join(F.broadcast(p), "bucket")
-        .filter(F.col("negative_label") != F.col("anchor_label"))
+        pairs.filter(F.col("negative_label") != F.col("anchor_label"))
         .withColumn("sim", F.round(sim, 6))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
@@ -1950,22 +1948,92 @@ def _srp_meta(spark, name: str, *, fresh: bool = False):
     return _srp_meta_memo[key]
 
 
+def _sql_lit(v) -> str:
+    """SQL text of a driver-held value (None, int, float, str, a list
+    of them, or a dict as a named struct). A numeric list goes
+    through one split string, so a dim-64 vector parses as three
+    nodes, not 64; float text is ``repr`` (shortest round-trip, parsed
+    back to the same bits)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, dict):
+        return "named_struct(" + ", ".join(
+            f"'{k}', {_sql_lit(x)}" for k, x in v.items()
+        ) + ")"
+    v = list(v)
+    if v and all(isinstance(x, int) for x in v):
+        return f"CAST(split('{','.join(map(str, v))}', ',') AS ARRAY<BIGINT>)"
+    if v and all(isinstance(x, float) for x in v):
+        return f"CAST(split('{','.join(map(repr, v))}', ',') AS ARRAY<DOUBLE>)"
+    return "array(" + ", ".join(map(_sql_lit, v)) + ")"
+
+
+def _in_sql(col: str, values) -> Column:
+    """``col IN (values)`` as ONE parsed expression (``isin`` costs a
+    py4j call per value); the literal list still drives bucket pruning
+    and the pushed parquet filter. No values: a false predicate."""
+    values = list(values)
+    if not values:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(map(_sql_lit, values))})")
+
+
+def _bind(
+    df: DataFrame, key: str, rows: dict, types: dict, *, explode: bool = False
+) -> DataFrame:
+    """``df`` joined on ``key`` to rows the driver holds, as an
+    expression instead of a join: ``rows`` maps each key value to a
+    list of dicts over the columns of ``types`` (name → Spark SQL
+    type). Catalyst folds the map into ONE literal that generated code
+    reads by reference, so new values reuse compiled code, and no
+    local relation is staged or broadcast (each broadcast is a job).
+    A key with one row binds as a struct lookup; keys shared by
+    several rows, or every key when ``explode``, explode. Every
+    ``key`` value of ``df`` must be bound: callers filter the read to
+    the keys of ``rows`` first."""
+    if not rows:
+        return df.filter(F.lit(False)).select(
+            "*", *[F.lit(None).cast(t).alias(c) for c, t in types.items()]
+        )
+    key_t = df.schema[key].dataType.simpleString()
+    one = not explode and all(len(v) == 1 for v in rows.values())
+
+    def struct(r) -> str:
+        return "named_struct(" + ", ".join(
+            f"'{c}', CAST({_sql_lit(r[c])} AS {t})" for c, t in types.items()
+        ) + ")"
+
+    entries = ", ".join(
+        f"CAST({_sql_lit(k)} AS {key_t}), "
+        + (struct(v[0]) if one else "array(" + ", ".join(map(struct, v)) + ")")
+        for k, v in rows.items()
+    )
+    got = f"try_element_at(map({entries}), `{key}`)"
+    return df.selectExpr(
+        "*", f"{got} AS __b" if one else f"explode({got}) AS __b"
+    ).selectExpr(
+        *[f"`{c}`" for c in df.columns], *[f"__b.`{c}` AS `{c}`" for c in types]
+    )
+
+
 def _srp_probe_rows(spark, probe_ids: list, name: str):
-    """Look up probe rows and their bucket ids from a persisted SRP
-    index. Returns ``(probe_df, bucket_literals, dim, has_label,
-    id_col)``. The bucket-id collect is bounded by ``len(probe_ids)``
-    — the same per-query driver grain as BM25's term list — and
-    dedups driver-side (a ``distinct()`` here would add a shuffle to
-    every serving call for a handful of rows)."""
+    """A request's one build-time job: the probe rows ``(id, v, n,
+    bucket[, lbl])`` of a persisted SRP index, read bucket-pruned by
+    id and bounded by ``len(probe_ids)`` (the BM25 term-list grain).
+    Returns ``(rows, by_id schema, meta)``; ids not in the index have
+    no row."""
     if not probe_ids:
         raise ValueError("srp serving: probe_ids must be non-empty")
     meta = _srp_meta(spark, name)
     by_id = spark.table(f"{name}_by_id")
-    probes = by_id.filter(F.col(meta["id_col"]).isin(list(probe_ids)))
-    buckets = sorted(
-        {r["bucket"] for r in probes.select("bucket").collect()}
-    )
-    return probes, buckets, meta["dim"], meta["has_label"], meta["id_col"]
+    rows = by_id.filter(_in_sql(meta["id_col"], probe_ids)).collect()
+    return rows, by_id.schema, meta
 
 
 def srp_knn_indexed(
@@ -1977,32 +2045,37 @@ def srp_knn_indexed(
     multiprobe: bool = False,
 ) -> DataFrame:
     """Serve ANN top-``k`` from the persisted SRP layout
-    (:func:`build_srp_index`). Same output contract — and identical
-    neighbors/sims (shared :func:`_srp_rerank` tail over the stored
-    raw vectors and norms) — as :func:`srp_knn` (including
-    ``multiprobe``: the candidate read's IN-list widens to the
-    Hamming-1 flips, still bucket-pruned), but per-query work is two
-    bucket-pruned reads (probe rows by id, candidates by bucket):
-    independent of corpus size."""
-    probes, buckets, dim, _, idc = _srp_probe_rows(spark, probe_ids, name)
-    if not buckets:
-        probes = probes.limit(0)  # no probe found: empty, stable schema
-    p = probes.select(
-        F.col(idc).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("n").alias("qn"),
-        "bucket",
-    )
-    if multiprobe:
-        planes = int(_srp_meta(spark, name)["planes"])
-        p = p.withColumn("bucket", F.explode(_hamming1_buckets(planes)))
-        buckets = sorted(
-            set(buckets)
-            | {b ^ (1 << i) for b in buckets for i in range(planes)}
-        )
+    (:func:`build_srp_index`). Same output contract, and identical
+    neighbors/sims, as :func:`srp_knn` (shared :func:`_cosine_topk`
+    over the stored raw vectors and norms), ``multiprobe`` included:
+    the candidate read's IN-list widens to the Hamming-1 flips, still
+    bucket-pruned.
+
+    One lookup job (:func:`_srp_probe_rows`) plus one action: the
+    probe vectors, norms and buckets are bound into the action as
+    literals (:func:`_bind`), so the action is the bucket-pruned
+    candidate read and the rank window, with no broadcast. Per-query
+    work is the probed buckets' rows, independent of corpus size."""
+    rows, schema, meta = _srp_probe_rows(spark, probe_ids, name)
+    idc, planes = meta["id_col"], int(meta["planes"])
+    flips = [0] + [1 << i for i in range(planes)] if multiprobe else [0]
+    probes: dict = {}
+    for r in rows:
+        q = {"query_id": r[idc], "qv": r["v"], "qn": r["n"]}
+        for f in flips:
+            probes.setdefault(r["bucket"] ^ f, []).append(q)
+    # one task per probed bucket (the bucketed scan has a partition for
+    # every bucket, pruned or not). The coalesce also ends the code
+    # stage that carries the bucket's IN value, which Spark inlines
+    # into generated code: that small stage compiles per request, and
+    # the unrolled dim-wide cosine after it once per session. And it
+    # keeps the scan bucketed (pruned): with only projections and
+    # filters below the rank window's exchange the planner would turn
+    # bucketing off
     c = (
         spark.table(f"{name}_by_bucket")
-        .filter(F.col("bucket").isin(buckets) if buckets else F.lit(False))
+        .filter(_in_sql("bucket", sorted(probes)))
+        .coalesce(max(1, len(probes)))
         .select(
             F.col(idc).alias("neighbor_id"),
             F.col("v").alias("nv"),
@@ -2010,7 +2083,15 @@ def srp_knn_indexed(
             "bucket",
         )
     )
-    return _srp_rerank(p, c, dim, k)
+    types = {
+        "query_id": schema[idc].dataType.simpleString(),
+        "qv": schema["v"].dataType.simpleString(),
+        "qn": schema["n"].dataType.simpleString(),
+    }
+    pairs = _bind(c, "bucket", probes, types).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+    return _cosine_topk(pairs, int(meta["dim"]), k)
 
 
 def srp_hard_negatives_indexed(
@@ -2018,25 +2099,26 @@ def srp_hard_negatives_indexed(
 ) -> DataFrame:
     """Serve hard-negative mining from the persisted SRP layout built
     with ``label_col`` — identical rows to :func:`srp_hard_negatives`
-    (shared :func:`_srp_negatives_rerank` tail), bucket-pruned reads."""
-    probes, buckets, dim, has_label, idc = _srp_probe_rows(
-        spark, probe_ids, name
-    )
-    if not has_label:
+    (shared :func:`_srp_negatives_rerank`); one lookup job, then one
+    action over the bucket-pruned candidate read with the anchors
+    bound as literals."""
+    rows, schema, meta = _srp_probe_rows(spark, probe_ids, name)
+    if not meta["has_label"]:
         raise ValueError(
             f"srp_hard_negatives_indexed: index {name!r} was built "
             "without label_col"
         )
-    p = probes.select(
-        F.col(idc).alias("anchor_id"),
-        F.col("v").alias("qv"),
-        F.col("n").alias("qn"),
-        F.col("lbl").alias("anchor_label"),
-        "bucket",
-    )
+    idc = meta["id_col"]
+    anchors: dict = {}
+    for r in rows:
+        anchors.setdefault(r["bucket"], []).append(
+            {"anchor_id": r[idc], "qv": r["v"], "qn": r["n"],
+             "anchor_label": r["lbl"]}
+        )
     c = (
         spark.table(f"{name}_by_bucket")
-        .filter(F.col("bucket").isin(buckets) if buckets else F.lit(False))
+        .filter(_in_sql("bucket", sorted(anchors)))
+        .coalesce(max(1, len(anchors)))  # as in srp_knn_indexed
         .select(
             F.col(idc).alias("negative_id"),
             F.col("v").alias("nv"),
@@ -2045,7 +2127,15 @@ def srp_hard_negatives_indexed(
             "bucket",
         )
     )
-    return _srp_negatives_rerank(p, c, dim, k)
+    types = {
+        "anchor_id": schema[idc].dataType.simpleString(),
+        "qv": schema["v"].dataType.simpleString(),
+        "qn": schema["n"].dataType.simpleString(),
+        "anchor_label": schema["lbl"].dataType.simpleString(),
+    }
+    return _srp_negatives_rerank(
+        _bind(c, "bucket", anchors, types), int(meta["dim"]), k
+    )
 
 
 def _ivfpq_params(coarse_centroids, codebooks):
@@ -2373,34 +2463,30 @@ def ivfpq_topk_indexed(
 ) -> DataFrame:
     """Serve IVF+PQ ANN top-``k`` from the persisted layout
     (:func:`build_ivfpq_index`) — identical rows to
-    :func:`ivf_pq_topk` by construction (shared :func:`_ivfpq_tail`),
-    and a BATCH form by nature: ``probe_ids`` is a list, so N probes
-    amortize one job (the ``bm25_topk_indexed_many`` discipline).
-    Per-request IO: probe rows by id (bucket-pruned), the routed
-    clusters' code buckets (cluster IN-list, bucket-pruned — the
-    driver-side collect is bounded by len(probe_ids)·nprobe, the
-    _srp_probe_rows grain), and ``candidates`` full vectors per probe
-    for the re-rank — independent of corpus size.
+    :func:`ivf_pq_topk` by construction (shared :func:`_ivfpq_adc_topk`
+    and :func:`_cosine_topk`), and a BATCH form by nature:
+    ``probe_ids`` is a list, so N probes amortize one job.
+
+    One lookup job reads the probe rows by id (bucket-pruned, bounded
+    by ``len(probe_ids)``), with each probe's stored cluster ranking,
+    ADC offsets and micro-quantized vector. Everything probe-sided is
+    then bound into the action as literals (:func:`_bind`): the routed
+    clusters with their offsets, the M ADC lookup tables (computed
+    driver-side in exact int arithmetic, the Σ xq·book fold
+    :func:`_pq_probe_luts` expresses) and the probe vectors and norms.
+    The action reads the routed clusters' code buckets (cluster
+    IN-list, bucket-pruned) and joins ``{name}_by_id`` for the exact
+    re-rank; that join is its one broadcast when the table is small.
+    Per-request IO is NOT independent of corpus size: the re-rank join
+    reads every bucket of ``{name}_by_id`` (the candidate ids are only
+    known inside the action), so it grows with the corpus.
 
     The meta row's ``variant`` decides the scoring form: a ``raw``
     index serves exactly :func:`ivf_pq_topk`; a ``residual`` index
     (built with ``residual=True``) serves exactly
     :func:`ivf_pq_residual_topk` — the ADC offsets ``⟨q, c⟩`` come
-    from the STORED per-cluster prefix (by_id ``offsets``), so the
-    residual form costs the same one point-lookup job.
-
-    Single-probe p50 (round-11 breakdown, sf0.1): staging the PQ
-    codebooks through ``F.lit(list)`` cost a py4j round trip PER
-    ELEMENT (~0.67 s/request); :func:`_int_array_lit` removed it
-    (1.76 s → 1.56 s raw / 1.30 s residual pinned in
-    SERVING_LATENCY.json). The REMAINING single-probe wall is
-    structural: 2 jobs + 3 broadcasts + 2 window exchanges + the
-    re-rank join ≈ 3–4× the single-job BM25 floor (~340 ms), plus
-    ~200 ms of fresh-literal codegen (same-id repeats are that much
-    faster). Collapsing the tail below that would cost the bucket
-    pruning (IN-lists are what make per-request IO corpus-independent)
-    — evaluated and rejected; BATCH the probes instead: the amortized
-    path is 72–74 ms/query at 20 probes, the intended service shape."""
+    from the STORED per-cluster prefix (by_id ``offsets``). Pre-round-12
+    indexes without the stored ``xq`` fail with a rebuild hint."""
     if not probe_ids:
         raise ValueError("ivfpq serving: probe_ids must be non-empty")
     coarse_centroids, codebooks = _ivfpq_params(coarse_centroids, codebooks)
@@ -2415,14 +2501,13 @@ def ivfpq_topk_indexed(
             "ivfpq_topk_indexed: centroids/codebooks differ from the "
             "ones the index was built with"
         )
-    # ONE bounded point-lookup job (bucket-pruned by id) fetches the
-    # probe rows INCLUDING their stored cluster ranking; everything
-    # probe-sided then builds as local literals — no per-request
-    # routing job, no repeated by_id scans, no K·dim route expression
-    # per call (measured: the three together were ~2.5 s of the
-    # previous ~5 s request wall).
     by_id = spark.table(f"{name}_by_id")
-    rows = by_id.filter(F.col(idc).isin(list(probe_ids))).collect()
+    if "xq" not in by_id.columns:
+        raise ValueError(
+            f"{name}_by_id predates the round-12 layout (no stored xq) — "
+            "rebuild the index with build_ivfpq_index"
+        )
+    rows = by_id.filter(_in_sql(idc, probe_ids)).collect()
     missing = set(probe_ids) - {r[idc] for r in rows}
     if missing:
         # loud, like the artifact/dim checks above: a typo'd or
@@ -2431,73 +2516,57 @@ def ivfpq_topk_indexed(
             f"ivfpq_topk_indexed: probe ids not in {name}_by_id: "
             f"{sorted(missing)}"
         )
-    id_sql = by_id.schema[idc].dataType.simpleString()
-    routed_local = [
-        (r[idc], int(c), int(o))
-        for r in rows
-        for c, o in zip(r["routing"][:nprobe], r["offsets"][:nprobe])
-    ]
-    routed = local_frame(
-        spark, routed_local, f"query_id {id_sql}, cluster int, __qc long"
-    )
-    if not residual:
-        routed = routed.drop("__qc")
-    clusters = sorted({c for _, c, _o in routed_local})
-    enc = spark.table(f"{name}_codes").filter(
-        F.col("cluster").isin(clusters) if clusters else F.lit(False)
-    ).select(F.col(idc).alias("neighbor_id"), "cluster", "codes")
-    pv_local = local_frame(
-        spark,
-        [(r[idc], [float(x) for x in r["v"]], float(r["n"])) for r in rows],
-        f"query_id {id_sql}, qv array<double>, qn double",
-    )
-    if "xq" in spark.table(f"{name}_by_id").columns:
-        # round-12 layout: by_id stores the micro-quantized vector, so
-        # the probe's M ADC lookup tables compute DRIVER-SIDE in exact
-        # int arithmetic (the same Σ xq·book fold _pq_probe_luts
-        # expresses) — the request plan then carries NO codebook
-        # literals and no M·K·d expression tree, the round-11-verdict
-        # literal weight that dominated the single-probe p50
-        p = local_frame(
-            spark,
+    id_t = by_id.schema[idc].dataType.simpleString()
+    routed: dict = {}
+    pv: dict = {}
+    for r in rows:
+        xq = r["xq"]
+        luts = [
             [
-                (
-                    r[idc],
-                    [
-                        [
-                            sum(
-                                int(r["xq"][m * d + j])
-                                * int(books[m][c * d + j])
-                                for j in range(d)
-                            )
-                            for c in range(k_cent)
-                        ]
-                        for m in range(m_sub)
-                    ],
+                sum(
+                    int(xq[m * d + j]) * int(books[m][c * d + j])
+                    for j in range(d)
                 )
-                for r in rows
-            ],
-            f"query_id {id_sql}, __luts array<array<bigint>>",
-        )
-    else:
-        # pre-round-12 index without stored xq: the expression path
-        p = _pq_probe_luts(
-            pv_local.select("query_id", F.col("qv").alias("__qv")),
-            "__qv",
-            books,
-            m_sub,
-            k_cent,
-            d,
-        )
-    c = spark.table(f"{name}_by_id").select(
+                for c in range(k_cent)
+            ]
+            for m in range(m_sub)
+        ]
+        for cl, off in zip(r["routing"][:nprobe], r["offsets"][:nprobe]):
+            routed.setdefault(cl, []).append(
+                {"query_id": r[idc], "__luts": luts, "__qc": off}
+            )
+        pv[r[idc]] = [{"qv": r["v"], "qn": r["n"]}]
+    types = {"query_id": id_t, "__luts": "array<array<bigint>>"}
+    if residual:
+        types["__qc"] = "bigint"
+    enc = (
+        spark.table(f"{name}_codes")
+        .filter(_in_sql("cluster", sorted(routed)))
+        .coalesce(max(1, len(routed)))  # as in srp_knn_indexed
+        .select(F.col(idc).alias("neighbor_id"), "cluster", "codes")
+    )
+    pairs = _bind(enc, "cluster", routed, types).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+    cand = _ivfpq_adc_topk(
+        pairs, m_sub, candidates, "__qc" if residual else None
+    )
+    c = by_id.select(
         F.col(idc).alias("neighbor_id"),
         F.col("v").alias("nv"),
         F.col("n").alias("nn"),
     )
-    return _ivfpq_tail(
-        enc, routed, p, pv_local, c, dim, m_sub,
-        k=k, candidates=candidates, exclude_self=True,
-        adc_offset_col="__qc" if residual else None,
+    return _cosine_topk(
+        _bind(
+            cand.join(F.broadcast(c), "neighbor_id"),
+            "query_id",
+            pv,
+            {
+                "qv": by_id.schema["v"].dataType.simpleString(),
+                "qn": by_id.schema["n"].dataType.simpleString(),
+            },
+        ),
+        dim, k, "n_scanned",
     )
 
 

@@ -15,10 +15,10 @@ Usage (from the repo root, so Python workers import the package):
                                    [--changed-since [REF]] [--out FILE]
 
 ``--changed-since`` sweeps the queries ``registry_head.changed_queries``
-attributes to the diff against REF (default: the last ``round N:``
-commit), or the whole roster when the diff is not fully attributable or
-other package files changed, then runs the value-parity and output-type
-test suites. The sweep never writes ``plans/registry_head.txt``.
+attributes to the diff against REF (default: ``HEAD``, i.e. the
+worktree against the last commit), or the whole roster when the diff is
+not fully attributable or other package files changed, then runs the
+value-parity and output-type test suites. The sweep never writes ``plans/registry_head.txt``.
 
 ``normalize`` and ``compare`` are the project's one result normalizer
 and comparator; ``tests/conftest.py`` imports them.
@@ -117,15 +117,18 @@ def check(spark, con, fn, sf_dir: str, oracle: str | None):
 
 
 def changed_since(ref: str) -> set[str] | None:
-    """Queries changed since ``ref`` (default ref: the last round
-    commit), or None when the diff calls for the whole roster."""
+    """Queries changed since ``ref`` (default ``HEAD``: the worktree
+    against the last commit), or None when the diff calls for the
+    whole roster; prints the base and, on a fallback, why."""
     base = ref or registry_head.default_base_ref()
     names, fully_mapped, other = registry_head.changed_queries(base)
-    print(f"base={base[:12]}: {len(names)} changed queries: {sorted(names)}")
-    if not fully_mapped or other:
-        print(f"unattributable changes or other package files {other}: full roster")
-        return None
-    return names
+    print(f"base={base}: {len(names)} changed queries: {sorted(names)}")
+    if not fully_mapped:
+        print("full roster: a changed line in plans/queries.py or "
+              "plans/oracles.py maps to no query")
+    if other:
+        print(f"full roster: package files outside plans/ changed: {other}")
+    return names if fully_mapped and not other else None
 
 
 def main() -> None:

@@ -22,8 +22,7 @@ Mapping rules (AST-based, so line drift is irrelevant):
   the names that were attributed still lead the registry.
 
 Usage: python scripts/registry_head.py [base_ref]
-Default base_ref = the most recent driver round-artifact commit
-(message ``round N: ...``).
+Default base_ref = ``HEAD``: the worktree against the last commit.
 """
 
 from __future__ import annotations
@@ -50,12 +49,9 @@ def _git(*args: str) -> str:
 
 
 def default_base_ref() -> str:
-    """Most recent round-artifact commit (the driver's snapshot)."""
-    out = _git("log", "--grep=^round [0-9]*:", "--format=%H", "-n", "1")
-    ref = out.strip()
-    if not ref:
-        raise SystemExit("no 'round N:' commit found; pass a base ref")
-    return ref
+    """``HEAD``: diff the worktree against the last commit, i.e. the
+    change being made."""
+    return "HEAD"
 
 
 def changed_new_lines(base: str, path: str) -> list[int]:

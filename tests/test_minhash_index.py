@@ -57,6 +57,22 @@ def test_indexed_probe_matches_in_session(spark, mh_tables):
     assert got == want and len(got) > 0
 
 
+def test_probe_follows_a_same_name_rebuild(spark, mh_tables):
+    """near_dup_probe reads the meta row through the per-session memo;
+    rebuilding the index under the same name with another hash family
+    must reach the very next probe (build_minhash_index drops the memo
+    entry), whose rows then equal the in-session form's with that
+    family."""
+    old, probes = _corpus(spark)
+    build_minhash_index(old, num_hashes=16, bands=8, name="t_mh", n_buckets=4)
+    first = _rows(near_dup_probe(probes, name="t_mh"))
+    build_minhash_index(old, num_hashes=12, bands=4, name="t_mh", n_buckets=4)
+    got = _rows(near_dup_probe(probes, name="t_mh"))
+    want = _rows(near_dup_pairs_vs_corpus(old, probes, num_hashes=12, bands=4))
+    assert got == want and len(got) > 0
+    assert got != first
+
+
 def test_exact_mirror_estimates_full_agreement(spark, mh_tables):
     old, probes = _corpus(spark)
     build_minhash_index(old, num_hashes=16, bands=8, name="t_mh", n_buckets=4)

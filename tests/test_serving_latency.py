@@ -30,6 +30,9 @@ PINS_P50_MS = {
     "content_precomputed": 350.0,  # measured 151
     "hybrid_precomputed": 800.0,  # measured 364
     "bm25_indexed": 650.0,  # measured 304 (r8, postings layout)
+    # one lookup job + one action per request (sf0.1, control 44.5 ms)
+    "srp_indexed": 670.0,  # measured 334.5
+    "ivfpq_indexed": 960.0,  # measured 479.5
 }
 
 # Same-run control p50 (serving_probe: fresh tiny single-stage plan +
