@@ -196,15 +196,56 @@ def signatures_from_sets(
     gain). All arithmetic stays in int64: a_i·base < 2^38. Each
     aggregate is one parsed SQL expression (the :func:`hash60` form),
     one py4j call instead of one per Column operator."""
-    base = (
-        f"CAST(conv(substring(md5(sh), 1, {HASH_HEX_DIGITS}), 16, 10) AS BIGINT)"
-        f" % {MINHASH_PRIME}"
-    )
     aggs = [
-        F.expr(f"min(({a} * ({base}) + {b}) % {MINHASH_PRIME}) AS h{i}")
-        for i, (a, b) in enumerate(map(_affine, range(num_hashes)))
+        F.expr(f"min({_minhash_sql(i, _minhash_base_sql('sh'))}) AS h{i}")
+        for i in range(num_hashes)
     ]
     return sets.groupBy(F.col("sid").alias(id_col)).agg(*aggs)
+
+
+def _minhash_base_sql(sh: str) -> str:
+    """SQL for a shingle's base hash (md5 prefix mod the prime)."""
+    return (
+        f"CAST(conv(substring(md5({sh}), 1, {HASH_HEX_DIGITS}), 16, 10) AS BIGINT)"
+        f" % {MINHASH_PRIME}"
+    )
+
+
+def _minhash_sql(i: int, base: str) -> str:
+    """SQL for hash ``i`` of the affine family over a base hash."""
+    a, b = _affine(i)
+    return f"({a} * ({base}) + {b}) % {MINHASH_PRIME}"
+
+
+def _row_signatures(
+    df: DataFrame, id_col: str, text_col: str, *, num_hashes: int, k: int
+) -> DataFrame:
+    """:func:`minhash_signatures` computed inside each row, with no
+    shuffle: the shingles of :func:`shingle_rows` (k consecutive
+    non-empty tokens joined by a space) as an array, then the min of
+    each affine hash over it. Same values per document; rows are not
+    grouped, so ``id_col`` must be unique. Built for small batches,
+    where the shuffled form's three exchanges are most of the cost."""
+    toks = f"filter(split(lower(`{text_col}`), '[^a-z0-9]+'), t -> t != '')"
+    shingles = (
+        f"transform(sequence(1, size(__t) - {k - 1}), "
+        f"i -> array_join(slice(__t, i, {k}), ' '))"
+    )
+    return (
+        df.selectExpr(f"`{id_col}`", f"{toks} AS __t")
+        .filter(f"size(__t) >= {k}")
+        .selectExpr(
+            f"`{id_col}`",
+            f"transform({shingles}, sh -> {_minhash_base_sql('sh')}) AS __b",
+        )
+        .selectExpr(
+            f"`{id_col}`",
+            *[
+                f"array_min(transform(__b, x -> {_minhash_sql(i, 'x')})) AS h{i}"
+                for i in range(num_hashes)
+            ],
+        )
+    )
 
 
 def minhash_lsh_pairs(
@@ -1647,7 +1688,8 @@ def near_dup_probe(
     Plan shape: the probe batch is shingled and signed with the META
     row's family (never the caller's guess), read through the
     per-session memo that a same-name rebuild drops. In the admission
-    form one build-time lookup job collects each probe's signature and
+    form one build-time lookup job signs each probe within its row
+    (:func:`_row_signatures`, no shuffle) and collects its signature and
     band keys, for at most ``max_pushdown_keys // bands`` probes (an
     admission micro-batch: batch × bands keys, the BM25 term-list
     grain), and the action binds them as literals
@@ -1675,9 +1717,7 @@ def near_dup_probe(
     idc, nh, bands = meta["id_col"], int(meta["num_hashes"]), int(meta["bands"])
     if idc not in new_docs.columns:
         raise ValueError(f"near_dup_probe: probe batch lacks id col {idc!r}")
-    sig_p = minhash_signatures(
-        new_docs, idc, text_col, num_hashes=nh, k=int(meta["k"])
-    )
+    k = int(meta["k"])
     bands_c = spark.table(f"{name}_bands")
     sig_c = spark.table(f"{name}_sigs")
     out = dict(
@@ -1687,13 +1727,15 @@ def near_dup_probe(
     )
     if max_pushdown_keys:
         # the request's one build-time job: at most cap + 1 probe
-        # signatures with their band keys. One partition lets the
-        # collect's own limit finish in one job; a limit operator would
-        # instead compile its stage anew on every call (each one
-        # generates a counter of its own into the code)
+        # signatures with their band keys, signed row by row (no
+        # shuffle). One partition lets the collect's own limit finish
+        # in one job; a limit operator would instead compile its stage
+        # anew on every call (each one generates a counter of its own
+        # into the code)
         cap = int(max_pushdown_keys) // bands
         probes = (
-            sig_p.selectExpr(
+            _row_signatures(new_docs, idc, text_col, num_hashes=nh, k=k)
+            .selectExpr(
                 f"`{idc}` AS id",
                 "named_struct("
                 + ", ".join(f"'h{i}', h{i}" for i in range(nh))
@@ -1704,9 +1746,12 @@ def near_dup_probe(
             .limit(cap + 1)
             .collect()
         )
-        if len(probes) <= cap:
+        # a repeated id takes the bulk form, which signs the union of
+        # its rows' shingles
+        if len(probes) <= cap and len({r["id"] for r in probes}) == len(probes):
             id_t = new_docs.schema[idc].dataType.simpleString()
             return _near_dup_bound(probes, bands_c, sig_c, idc, id_t, nh, **out)
+    sig_p = minhash_signatures(new_docs, idc, text_col, num_hashes=nh, k=k)
     if cut_lineage:
         # bulk form: two consumers (band keys + agreement) — cut
         # once. Callers in LONG-LIVED processes (the streaming sink)
@@ -1750,20 +1795,22 @@ def _near_dup_bound(
     sigs: dict = {}
     for r in probes:
         for key in r["keys"]:
-            by_key.setdefault(key, []).append({probe_id_out: r["id"]})
+            by_key.setdefault(key, []).append(r["id"])
         sigs[r["id"]] = [{"p": r["p"].asDict()}]
     cand = (
         _bind(
             bands_c.filter(_in_sql("key", sorted(by_key))),
             "key",
-            by_key,
-            {probe_id_out: id_t},
-            # a key may be any number of probes' key: the Generate also
-            # keeps the band read on its bucketed scan when it selects
-            # every bucket
-            explode=True,
+            {key: [{"__pids": ids}] for key, ids in by_key.items()},
+            {"__pids": f"array<{id_t}>"},
         )
-        .select(probe_id_out, F.col(idc).alias(corpus_id_out))
+        # a key may be any number of probes' key. The Generate also
+        # keeps the band read on its bucketed scan when it selects
+        # every bucket
+        .select(
+            F.explode("__pids").alias(probe_id_out),
+            F.col(idc).alias(corpus_id_out),
+        )
         .distinct()
     )
     p_t = "struct<" + ",".join(f"h{i}:bigint" for i in range(nh)) + ">"

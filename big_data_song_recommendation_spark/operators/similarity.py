@@ -1984,25 +1984,26 @@ def _in_sql(col: str, values) -> Column:
     return F.expr(f"`{col}` IN ({', '.join(map(_sql_lit, values))})")
 
 
-def _bind(
-    df: DataFrame, key: str, rows: dict, types: dict, *, explode: bool = False
-) -> DataFrame:
+def _bind(df: DataFrame, key: str, rows: dict, types: dict) -> DataFrame:
     """``df`` joined on ``key`` to rows the driver holds, as an
     expression instead of a join: ``rows`` maps each key value to a
     list of dicts over the columns of ``types`` (name → Spark SQL
     type). Catalyst folds the map into ONE literal that generated code
     reads by reference, so new values reuse compiled code, and no
     local relation is staged or broadcast (each broadcast is a job).
-    A key with one row binds as a struct lookup; keys shared by
-    several rows, or every key when ``explode``, explode. Every
-    ``key`` value of ``df`` must be bound: callers filter the read to
-    the keys of ``rows`` first."""
+    When every key binds one row, each ``df`` row looks up one struct;
+    otherwise it explodes into one row per bound dict. The explode is
+    a Generate, and a single-probe SRP plan stays Generate-free
+    (``test_indexed_plan_prunes_buckets_and_never_rehashes`` reads a
+    Generate there as the signature recompute). Every ``key`` value of
+    ``df`` must be bound: callers filter the read to the keys of
+    ``rows`` first."""
     if not rows:
         return df.filter(F.lit(False)).select(
             "*", *[F.lit(None).cast(t).alias(c) for c, t in types.items()]
         )
     key_t = df.schema[key].dataType.simpleString()
-    one = not explode and all(len(v) == 1 for v in rows.values())
+    one = all(len(v) == 1 for v in rows.values())
 
     def struct(r) -> str:
         return "named_struct(" + ", ".join(
@@ -2450,6 +2451,15 @@ def merge_ivfpq_index(
         )
 
 
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether the planner's size estimate of ``df`` is within
+    ``spark.sql.autoBroadcastJoinThreshold`` (never when it is -1)."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= limit and size <= limit
+
+
 def ivfpq_topk_indexed(
     spark,
     probe_ids: list,
@@ -2476,7 +2486,9 @@ def ivfpq_topk_indexed(
     :func:`_pq_probe_luts` expresses) and the probe vectors and norms.
     The action reads the routed clusters' code buckets (cluster
     IN-list, bucket-pruned) and joins ``{name}_by_id`` for the exact
-    re-rank; that join is its one broadcast when the table is small.
+    re-rank; that table is broadcast only when its size estimate is
+    under ``spark.sql.autoBroadcastJoinThreshold``, as the planner
+    decides, and joined by the planner's choice otherwise.
     Per-request IO is NOT independent of corpus size: the re-rank join
     reads every bucket of ``{name}_by_id`` (the candidate ids are only
     known inside the action), so it grows with the corpus.
@@ -2518,6 +2530,7 @@ def ivfpq_topk_indexed(
         )
     id_t = by_id.schema[idc].dataType.simpleString()
     routed: dict = {}
+    lut: dict = {}
     pv: dict = {}
     for r in rows:
         xq = r["xq"]
@@ -2532,11 +2545,12 @@ def ivfpq_topk_indexed(
             for m in range(m_sub)
         ]
         for cl, off in zip(r["routing"][:nprobe], r["offsets"][:nprobe]):
-            routed.setdefault(cl, []).append(
-                {"query_id": r[idc], "__luts": luts, "__qc": off}
-            )
+            routed.setdefault(cl, []).append({"query_id": r[idc], "__qc": off})
+        # bound by query id: in the routed map it would be copied to
+        # each of the probe's nprobe clusters
+        lut[r[idc]] = [{"__luts": luts}]
         pv[r[idc]] = [{"qv": r["v"], "qn": r["n"]}]
-    types = {"query_id": id_t, "__luts": "array<array<bigint>>"}
+    types = {"query_id": id_t}
     if residual:
         types["__qc"] = "bigint"
     enc = (
@@ -2545,8 +2559,13 @@ def ivfpq_topk_indexed(
         .coalesce(max(1, len(routed)))  # as in srp_knn_indexed
         .select(F.col(idc).alias("neighbor_id"), "cluster", "codes")
     )
-    pairs = _bind(enc, "cluster", routed, types).filter(
-        F.col("neighbor_id") != F.col("query_id")
+    pairs = _bind(
+        _bind(enc, "cluster", routed, types).filter(
+            F.col("neighbor_id") != F.col("query_id")
+        ),
+        "query_id",
+        lut,
+        {"__luts": "array<array<bigint>>"},
     )
     cand = _ivfpq_adc_topk(
         pairs, m_sub, candidates, "__qc" if residual else None
@@ -2556,9 +2575,15 @@ def ivfpq_topk_indexed(
         F.col("v").alias("nv"),
         F.col("n").alias("nn"),
     )
+    # broadcast the re-rank side when it is under the threshold, as the
+    # planner would; left to itself the planner broadcasts the smaller
+    # candidate side instead, and the rank window then needs one more
+    # exchange
+    if _fits_broadcast(c):
+        c = F.broadcast(c)
     return _cosine_topk(
         _bind(
-            cand.join(F.broadcast(c), "neighbor_id"),
+            cand.join(c, "neighbor_id"),
             "query_id",
             pv,
             {

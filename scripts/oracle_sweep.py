@@ -15,10 +15,12 @@ Usage (from the repo root, so Python workers import the package):
                                    [--changed-since [REF]] [--out FILE]
 
 ``--changed-since`` sweeps the queries ``registry_head.changed_queries``
-attributes to the diff against REF (default: ``HEAD``, i.e. the
-worktree against the last commit), or the whole roster when the diff is
-not fully attributable or other package files changed, then runs the
-value-parity and output-type test suites. The sweep never writes ``plans/registry_head.txt``.
+attributes to the diff against REF, or the whole roster when the diff
+is not fully attributable or other package files changed, then runs the
+value-parity and output-type test suites. REF defaults to ``HEAD``, so
+with no REF only UNCOMMITTED changes are checked; to check committed
+work, pass the commit it started from. The sweep never writes
+``plans/registry_head.txt``.
 
 ``normalize`` and ``compare`` are the project's one result normalizer
 and comparator; ``tests/conftest.py`` imports them.
@@ -117,12 +119,15 @@ def check(spark, con, fn, sf_dir: str, oracle: str | None):
 
 
 def changed_since(ref: str) -> set[str] | None:
-    """Queries changed since ``ref`` (default ``HEAD``: the worktree
-    against the last commit), or None when the diff calls for the
-    whole roster; prints the base and, on a fallback, why."""
-    base = ref or registry_head.default_base_ref()
+    """Queries changed since ``ref`` (default ``HEAD``: uncommitted
+    changes only), or None when the diff calls for the whole roster;
+    prints the base and, on a fallback, why."""
+    base = ref or "HEAD"
     names, fully_mapped, other = registry_head.changed_queries(base)
     print(f"base={base}: {len(names)} changed queries: {sorted(names)}")
+    if not names and fully_mapped and not other:
+        print(f"no query changed against {base}; committed work needs "
+              "--changed-since <the commit it started from>")
     if not fully_mapped:
         print("full roster: a changed line in plans/queries.py or "
               "plans/oracles.py maps to no query")
@@ -135,7 +140,11 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--sf", default="/root/testdata/sf0.01", metavar="DIR")
     ap.add_argument("--only", nargs="+", default=[], metavar="PREFIX")
-    ap.add_argument("--changed-since", nargs="?", const="", metavar="REF")
+    ap.add_argument(
+        "--changed-since", nargs="?", const="", metavar="REF",
+        help="sweep only queries changed against REF (default HEAD: "
+        "uncommitted changes only)",
+    )
     ap.add_argument("--out", metavar="FILE")
     args = ap.parse_args()
 

@@ -21,8 +21,10 @@ Mapping rules (AST-based, so line drift is irrelevant):
   ``fully_mapped=False``: callers must sweep the FULL roster, though
   the names that were attributed still lead the registry.
 
-Usage: python scripts/registry_head.py [base_ref]
-Default base_ref = ``HEAD``: the worktree against the last commit.
+Usage: python scripts/registry_head.py BASE_REF
+BASE_REF is required (the commit the change started from). When
+nothing maps to a query the file is left as it is, so a hand-curated
+head is never replaced by an empty one.
 """
 
 from __future__ import annotations
@@ -46,12 +48,6 @@ def _git(*args: str) -> str:
     return subprocess.run(
         ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
     ).stdout
-
-
-def default_base_ref() -> str:
-    """``HEAD``: diff the worktree against the last commit, i.e. the
-    change being made."""
-    return "HEAD"
 
 
 def changed_new_lines(base: str, path: str) -> list[int]:
@@ -274,10 +270,15 @@ def write_head(names: set[str] | None) -> None:
 
 
 def main() -> None:
-    base = sys.argv[1] if len(sys.argv) > 1 else default_base_ref()
+    if len(sys.argv) != 2:
+        sys.exit("usage: python scripts/registry_head.py BASE_REF")
+    base = sys.argv[1]
     names, fully_mapped, other = changed_queries(base)
-    write_head(names)
-    print(f"base={base[:12]}: {len(names)} changed queries -> {HEAD_TXT}")
+    if names:
+        write_head(names)
+        print(f"base={base[:12]}: {len(names)} changed queries -> {HEAD_TXT}")
+    else:
+        print(f"base={base[:12]}: no changed queries; {HEAD_TXT} left as it is")
     for n in sorted(names):
         print(f"  {n}")
     if not fully_mapped:

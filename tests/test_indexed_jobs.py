@@ -1,8 +1,10 @@
 """Spark jobs per indexed request (operators/similarity.py
 srp_knn_indexed / ivfpq_topk_indexed, operators/dedup.py
 near_dup_probe): a request runs ONE build-time lookup job, whose rows
-bind into the action as literals, and an action of one job, plus the
-re-rank broadcast for IVF-PQ. Counted through the status tracker's
+bind into the action as literals, and an action of one job, plus for
+IVF-PQ the re-rank join's broadcast of ``{name}_by_id``, which the
+planner picks at test scale (the table is under the broadcast
+threshold). Counted through the status tracker's
 job groups in a session shaped like the serving benchmark's (AQE off,
 so shuffle stages are not submitted as jobs of their own)."""
 

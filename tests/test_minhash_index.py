@@ -1,6 +1,6 @@
 """Persisted MinHash near-dup admission index (operators/dedup.py
 build_minhash_index / near_dup_probe / merge_minhash_index): indexed
-probe == in-session form, merged == rebuilt bit-exactly, loud failure
+probe == in-session form, row-local signatures == the aggregate, merged == rebuilt bit-exactly, loud failure
 modes, exact mirrors estimate 1.0."""
 
 from __future__ import annotations
@@ -9,8 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_song_recommendation_spark.operators.dedup import (
+    _row_signatures,
     build_minhash_index,
     merge_minhash_index,
+    minhash_signatures,
     near_dup_pairs_vs_corpus,
     near_dup_probe,
 )
@@ -71,6 +73,34 @@ def test_probe_follows_a_same_name_rebuild(spark, mh_tables):
     want = _rows(near_dup_pairs_vs_corpus(old, probes, num_hashes=12, bands=4))
     assert got == want and len(got) > 0
     assert got != first
+
+
+def test_row_signatures_equal_the_aggregate(spark, mh_tables):
+    """The admission form signs each probe within its row; for several
+    families those signatures equal minhash_signatures' shuffled
+    aggregate, edge cases included (no shingle, delimiter runs,
+    repeated shingles). A batch repeating an id, whose rows only the
+    aggregate signs as one document, takes the bulk form."""
+    edge = spark.createDataFrame(
+        [(-1, ""), (-2, None), (-3, "a b"), (-4, "  A, b;c  "),
+         (-5, "x y z x y z"), (-6, "--a--b--c--d")],
+        "doc_id long, text string",
+    )
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    docs = docs.unionByName(edge)
+    for k, nh in ((3, 16), (2, 32), (5, 8)):
+        want = _rows(minhash_signatures(docs, "doc_id", "text", num_hashes=nh, k=k))
+        got = _rows(_row_signatures(docs, "doc_id", "text", num_hashes=nh, k=k))
+        assert got == want and len(got) > 0, (k, nh)
+    old, probes = _corpus(spark)
+    build_minhash_index(old, num_hashes=16, bands=8, name="t_mh", n_buckets=4)
+    ids = sorted(r[0] for r in probes.select("doc_id").collect())[:3]
+    few = probes.filter(F.col("doc_id").isin(ids))
+    twice = few.unionByName(
+        few.select("doc_id", F.concat("text", F.lit(" more words")).alias("text"))
+    )
+    got = _rows(near_dup_probe(twice, name="t_mh"))
+    assert got == _rows(near_dup_probe(twice, name="t_mh", max_pushdown_keys=None))
 
 
 def test_exact_mirror_estimates_full_agreement(spark, mh_tables):

@@ -236,6 +236,34 @@ def test_ivfpq_codes_read_prunes_buckets(spark, ivfpq_index):
     assert any(int(a) < int(b) for a, b in matches)
 
 
+def test_ivfpq_rerank_broadcast_follows_the_threshold(spark, ivfpq_index):
+    """The re-rank join broadcasts ``{name}_by_id`` only while the table
+    is under spark.sql.autoBroadcastJoinThreshold; with broadcasting
+    off (-1) it broadcasts nothing, and the rows stay the same."""
+    from big_data_song_recommendation_spark.operators.similarity import (
+        ivfpq_topk_indexed,
+    )
+
+    def run():
+        df = ivfpq_topk_indexed(spark, [0, 1], name="t_ivfpq", nprobe=4)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in df.collect()), plan
+
+    want, plan = run()
+    # by_id is the join's right side: the candidates stream, so the
+    # rank window after the join needs no exchange
+    joins = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+    assert len(joins) == 1 and "BuildRight" in joins[0], plan
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        got, plan = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastExchange" not in plan, plan
+    assert got == want and len(got) > 0
+
+
 def test_ivfpq_merge_equals_rebuild_and_failure_modes(spark, ivfpq_index):
     from big_data_song_recommendation_spark.operators.similarity import (
         build_ivfpq_index,
