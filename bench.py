@@ -26,9 +26,11 @@ min-of-N is never served from a run-1 DataFrame whose lazy
 re-executes the full pipeline from parquet, and executor storage
 returns to zero between queries (the VERDICT r12 #4 bounded-heap fix).
 Both facts are disclosed on the JSON line (``plan_cache``,
-``state_release``). Numbers recorded under this policy are slower than
-r12's and honestly so — see OPTIMIZATION_r13.md for the old-vs-new
-protocol comparison.
+``state_release``). One metadata memo does outlive a run:
+``infer_dim`` keeps each vector column's width for the session's
+life, so runs after the first skip its 1-row width jobs (``dim_memo``).
+Numbers recorded under this policy are slower than r12's and honestly
+so — see OPTIMIZATION_r13.md for the old-vs-new protocol comparison.
 """
 
 from __future__ import annotations
@@ -136,11 +138,6 @@ def bench_session(
             "spark.sql.adaptive.enabled": str(aqe).lower(),
             "spark.sql.files.maxPartitionBytes": str(max_split),
             "spark.sql.files.openCostInBytes": str(open_cost),
-            # split sizing above already widens every scan to ~core
-            # count, so widen()'s partition-count probe (a per-query
-            # py4j/RDD round trip + possible extra exchange) is pure
-            # overhead here — skip it statically
-            "spark.graft.widen.enabled": "false",
             **(overrides or {}),
         },
     )
@@ -247,6 +244,7 @@ def main() -> None:
         "pinned_tables": False,
         "plan_cache": False,
         "state_release": "per_query_run",
+        "dim_memo": "per_session",
         "bench_action": "noop",
         **sizing,
     }

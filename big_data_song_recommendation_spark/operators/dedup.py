@@ -33,35 +33,6 @@ def hash60(col: Column, prefix: str | None = None) -> Column:
     return F.conv(F.substring(F.md5(c), 1, HASH_HEX_DIGITS), 16, 10).cast("long")
 
 
-def widen(df: DataFrame, enabled: bool = True) -> DataFrame:
-    """Repartition up to the cluster's parallelism if the input arrives
-    narrow (a small file scans as ONE partition, serializing every
-    downstream regex/explode onto one core). At real scale inputs are
-    already wide and this is a no-op.
-
-    Call with ``enabled=False`` for intermediate (post-shuffle) inputs:
-    the partition-count probe (``df.rdd``) forces AQE to EXECUTE the
-    upstream plan, so it must only run on cheap leaf scans.
-
-    Sessions that size their file splits to the core count (bench.py's
-    ``spark.sql.files.maxPartitionBytes``/``openCostInBytes`` rule, or
-    any cluster whose scans are already wide) can set
-    ``spark.graft.widen.enabled=false`` to skip the probe entirely —
-    then the plan is left untouched and nothing executes early
-    (VERDICT r3: a conf-driven static default removes the probe)."""
-    if not enabled:
-        return df
-    if (
-        df.sparkSession.conf.get("spark.graft.widen.enabled", "true").lower()
-        == "false"
-    ):
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup by normalized-text fingerprint: per-row keep flag
     (smallest id per fingerprint group wins, deterministic)."""
@@ -339,7 +310,7 @@ def simhash(
     """SimHash over the token multiset: per bit b, sum +1/-1 by token
     hash bit, then pack sign bits into one integer. ``bits``
     sum-aggregates in a single groupBy (map-side combinable)."""
-    toks = widen(df).select(
+    toks = df.select(
         F.col(id_col),
         F.explode(Ftext.tokens(text_col)).alias("tok"),
     ).filter(F.col("tok") != "")

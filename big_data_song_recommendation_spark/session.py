@@ -169,17 +169,24 @@ def release_query_state(
     parks until no batch is open.  The serial path (sweeps, bench)
     needs neither.
 
-    Returns the number of RDDs unpersisted (telemetry)."""
+    Returns the number of RDDs unpersisted (telemetry), catalog-cached
+    ones included."""
     def _release() -> int:
-        persistent = spark.sparkContext._jsc.getPersistentRDDs()
-        n = 0
-        for rdd_id, rdd in list(persistent.items()):  # py4j JavaMap view
-            if keep is not None and int(rdd_id) in keep:
-                continue
-            rdd.unpersist(False)
-            n += 1
+        jsc = spark.sparkContext._jsc
         if keep is None:
+            # catalog first: clearCache() unpersists the catalog-cached
+            # RDDs itself, and a second non-blocking unpersist of the
+            # same RDD races the first ("Block rdd_N_P does not exist")
+            n = len(jsc.getPersistentRDDs())
             spark.catalog.clearCache()
+            for rdd in list(jsc.getPersistentRDDs().values()):
+                rdd.unpersist(False)
+            return n
+        n = 0
+        for rdd_id, rdd in list(jsc.getPersistentRDDs().items()):
+            if int(rdd_id) not in keep:
+                rdd.unpersist(False)
+                n += 1
         return n
 
     if wait_for_idle:

@@ -1,39 +1,39 @@
-"""Scaling probe: replicate driver tables N× (in a temp dir — never
-touching /root/testdata) and measure how the hot paths scale. Evidence
-for the 100-TB design claims.
+"""Scaling probe: replicate driver tables N× in memory (the input
+parquet is only read) and measure how the hot paths scale. Evidence
+for the scale claims README.md, RUNBOOK.md and the operator
+docstrings cite, one mode per claim:
 
-``dedup`` mode (documents/embeddings):
+- ``botuser``: the co-occurrence per-user cap keeps one bot account's
+  pair count and wall flat (README, scale design notes);
+- ``skew``: salted top-k slices and equi-depth buckets stay balanced
+  under Zipf keys (README, scale design notes);
+- ``r7ops``: DSIR selection and both debounce forms track input
+  volume (``operators/debounce.py``);
+- ``r8ops``: prefix-filter Jaccard candidate tiers, the population-
+  sized bloom audit and BPE rounds vs merges (README, PPJoin row);
+- ``r9ops``: the incremental BM25 merge tracks the delta while a
+  rebuild tracks the corpus (RUNBOOK, BM25 serving);
+- ``r11ops``: K ∝ √n IVF retrain — scanned rows grow ~√n (README);
+- ``admission``: MinHash near-dup admission stays flat in corpus size
+  and PQ encode/ADC scale linearly (RUNBOOK, near-dup admission).
 
-- exact all-pairs Jaccard (q17 path) grows superlinearly (pair join);
-- MinHash+LSH (q20 path) stays near-linear (banded buckets);
-- blocked-GEMM embedding dedup grows with n^2/cores but at GEMM
-  throughput (~10^9 mul-add/s/core), not expression-eval throughput.
-
-``relational`` mode (lineitem/orders replicated, dimensions FIXED —
-the shape of real growth: facts scale, dims don't):
-
-- scan-aggregate (q01/TPC-H Q1) and the star joins (q55/Q5, q58/Q10,
-  q61/Q18) should scale ~linearly in fact rows;
-- plans must keep broadcasting the dimensions at every replication
-  (no SortMergeJoin creep) — asserted, not eyeballed.
-
-Run: python scripts/scale_probe.py [dedup|relational|curation|r4ops|ranks|botuser|skew] [replications ...]
+Run: python scripts/scale_probe.py MODE [replications ...]   (default 1 4 16)
 """
 
 from __future__ import annotations
 
-import os
+import math
 import sys
-import tempfile
 import time
 
 from pyspark.sql import functions as F
 
 sys.path.insert(0, ".")
-from big_data_song_recommendation_spark.operators import dedup  # noqa: E402
-from big_data_song_recommendation_spark.session import get_spark  # noqa: E402
+from big_data_song_recommendation_spark.session import (  # noqa: E402
+    get_spark,
+    release_query_state,
+)
 from big_data_song_recommendation_spark.sources.readers import (  # noqa: E402
-    TESTDATA_TABLES,
     load_table,
 )
 
@@ -45,204 +45,6 @@ def replicate(df, times: int, id_col: str):
     return rep.withColumn(
         id_col, F.col(id_col) * times + F.col("__r")
     ).drop("__r")
-
-
-def relational_probe(spark, reps: list[int]) -> None:
-    """Fact tables replicated (order keys remapped so lineitem⋈orders
-    stays 1:n), dimensions symlinked unchanged."""
-    from big_data_song_recommendation_spark.plans.queries import QUERIES
-
-    probe_queries = (
-        "q01_pricing_summary",
-        "q02_top_orders_by_revenue",  # r4 shuffle-hash reduce-first shape
-        "q55_local_supplier_volume",
-        "q58_returned_item_revenue",
-        "q61_large_volume_customers",
-    )
-    li0 = load_table(spark, SF_DIR, "lineitem")
-    ord0 = load_table(spark, SF_DIR, "orders")
-    with tempfile.TemporaryDirectory() as d:
-        for r in reps:
-            sf_dir = f"{d}/x{r}"
-            os.makedirs(sf_dir)
-            for t in TESTDATA_TABLES:
-                if t not in ("lineitem", "orders"):
-                    os.symlink(f"{SF_DIR}/{t}.parquet", f"{sf_dir}/{t}.parquet")
-            replicate(ord0, r, "o_orderkey").write.parquet(f"{sf_dir}/orders.parquet")
-            replicate(li0, r, "l_orderkey").write.parquet(f"{sf_dir}/lineitem.parquet")
-            n_li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-            line = [f"x{r}: lineitem={n_li}"]
-            for q in probe_queries:
-                df = QUERIES[q](spark, sf_dir)
-                plan = df._jdf.queryExecution().executedPlan().toString()
-                assert "SortMergeJoin" not in plan, f"{q} x{r}: dim join stopped broadcasting"
-                t0 = time.perf_counter()
-                n = df.count()
-                line.append(f"{q.split('_')[0]}={time.perf_counter() - t0:.1f}s/{n}r")
-            print(" ".join(line), flush=True)
-
-
-def curation_probe(spark, reps: list[int]) -> None:
-    """Round-3 curation operators under replication: winnowing (one
-    doc-keyed exchange — should scale ~linearly in tokens) and SRP-LSH
-    signatures + bucket-join ANN (GEMM-free projection — linear in
-    |v|·dim·planes; the bucket join's fan-out grows with bucket
-    occupancy, the quantity the planes knob controls)."""
-    from big_data_song_recommendation_spark.operators import dedup as dd
-    from big_data_song_recommendation_spark.operators import similarity as sim
-
-    docs0 = load_table(spark, SF_DIR, "documents")
-    emb0 = load_table(spark, SF_DIR, "embeddings")
-    with tempfile.TemporaryDirectory() as d:
-        for r in reps:
-            docs_path, emb_path = f"{d}/docs_{r}", f"{d}/emb_{r}"
-            replicate(docs0, r, "doc_id").write.parquet(docs_path)
-            replicate(emb0, r, "vec_id").write.parquet(emb_path)
-            docs = spark.read.parquet(docs_path)
-            emb = spark.read.parquet(emb_path)
-            n_docs, n_emb = docs.count(), emb.count()
-
-            t0 = time.perf_counter()
-            n_fp = dd.winnow_fingerprints(docs, "doc_id", "text").count()
-            t_win = time.perf_counter() - t0
-
-            t0 = time.perf_counter()
-            # more planes at larger scale: hold bucket occupancy
-            # roughly constant (the 100-TB tuning rule)
-            planes = 6 + max(0, r.bit_length() - 1)
-            sigs = sim.srp_signatures(emb, planes=planes)
-            n_sig = sigs.count()
-            t_srp = time.perf_counter() - t0
-
-            print(
-                f"x{r}: docs={n_docs} winnow_fps={n_fp} winnow={t_win:.1f}s | "
-                f"emb={n_emb} planes={planes} sigs={n_sig} srp={t_srp:.1f}s",
-                flush=True,
-            )
-
-
-def r4ops_probe(spark, reps: list[int]) -> None:
-    """Round-4 operators under replication: chunk_dedup (one window
-    shuffle on the chunk hash — should scale ~linearly in chunks, the
-    q15 profile at sub-doc grain) and bigram_lm_scores (one shingle
-    pass + bounded model-table joins — linear in tokens; the bigram
-    model tables grow with VOCABULARY², not corpus size, so the join
-    sides saturate). PageRank scales with EDGES per round — probed on
-    the replicated co-occurrence graph (items remapped per replica so
-    the graph grows, not just densifies)."""
-    from big_data_song_recommendation_spark.operators import cooccur
-    from big_data_song_recommendation_spark.operators.dedup import chunk_dedup
-    from big_data_song_recommendation_spark.operators.graph import pagerank
-    from big_data_song_recommendation_spark.operators.quality import (
-        bigram_lm_scores,
-    )
-
-    docs0 = load_table(spark, SF_DIR, "documents")
-    ev0 = load_table(spark, SF_DIR, "events")
-    with tempfile.TemporaryDirectory() as d:
-        for r in reps:
-            docs_path = f"{d}/docs_{r}"
-            replicate(docs0, r, "doc_id").write.parquet(docs_path)
-            docs = spark.read.parquet(docs_path)
-            n_docs = docs.count()
-
-            t0 = time.perf_counter()
-            n_chunks = chunk_dedup(docs, "doc_id", "text").count()
-            t_chunk = time.perf_counter() - t0
-
-            t0 = time.perf_counter()
-            n_scored = bigram_lm_scores(docs, "doc_id", "text").count()
-            t_lm = time.perf_counter() - t0
-
-            # replicate the user-item graph: users remapped per replica
-            ui = (
-                ev0.select(
-                    "user_id",
-                    F.expr("json_tuple(props, 'k')").alias("k0"),
-                )
-                .select("user_id", F.col("k0").cast("int").alias("item_id"))
-                .filter(F.col("item_id").isNotNull())
-                .distinct()
-            )
-            ui_r = replicate(ui, r, "user_id").withColumn(
-                "item_id",
-                F.col("item_id") + (F.col("user_id") % r) * 1000,
-            )
-            pairs = cooccur.cooccurrence_pairs(ui_r, min_support=3)
-            edges = pairs.select(
-                F.col("item_a").alias("src"), F.col("item_b").alias("dst")
-            ).union(
-                pairs.select(
-                    F.col("item_b").alias("src"), F.col("item_a").alias("dst")
-                )
-            )
-            t0 = time.perf_counter()
-            n_ranked = pagerank(edges, iterations=3).count()
-            t_pr = time.perf_counter() - t0
-
-            print(
-                f"x{r}: docs={n_docs} chunks={n_chunks} chunk_dedup={t_chunk:.1f}s | "
-                f"lm_scored={n_scored} lm={t_lm:.1f}s | "
-                f"pr_nodes={n_ranked} pagerank={t_pr:.1f}s",
-                flush=True,
-            )
-
-
-def ranks_probe(spark, reps: list[int]) -> None:
-    """Round-5 two-phase ranking under replication: entity tables of
-    1M·r rows ranked end-to-end. The global-window form is the r4
-    shape this round removed — probed only at the SMALLEST size as
-    the baseline (it is the single-task bottleneck); bucketed_rank and
-    bucketed_cumsum walls should grow ~linearly with rows while the
-    global window's wall is dominated by one task's sort whatever the
-    core count."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    from big_data_song_recommendation_spark.operators.ranks import (
-        bucketed_cumsum,
-        bucketed_rank,
-        with_equi_width_bucket,
-    )
-
-    base_n = 1_000_000
-    for r in reps:
-        n = base_n * r
-        ent = spark.range(n).select(
-            F.col("id").alias("k"),
-            (F.xxhash64("id") % 100000).cast("double").alias("v"),
-        )
-        t0 = time.perf_counter()
-        ranked = bucketed_rank(
-            with_equi_width_bucket(ent, "v", bins=256),
-            [F.col("v").asc(), F.col("k").asc()],
-            ["__vb"],
-            out="rn",
-        )
-        mx = ranked.agg(F.max("rn")).collect()[0][0]
-        t_rank = time.perf_counter() - t0
-        assert mx == n, (mx, n)
-
-        t0 = time.perf_counter()
-        cum = bucketed_cumsum(
-            with_equi_width_bucket(ent, "v", bins=256),
-            [F.col("v").asc(), F.col("k").asc()],
-            ["__vb"],
-            "v",
-            out="c",
-        )
-        cum.agg(F.max("c")).collect()
-        t_cum = time.perf_counter() - t0
-
-        line = f"x{r}: rows={n} bucketed_rank={t_rank:.1f}s bucketed_cumsum={t_cum:.1f}s"
-        if r == reps[0]:
-            t0 = time.perf_counter()
-            w = Window.orderBy(F.col("v").asc(), F.col("k").asc())
-            ent.withColumn("rn", F.row_number().over(w)).agg(
-                F.max("rn")
-            ).collect()
-            line += f" global_window_baseline={time.perf_counter() - t0:.1f}s"
-        print(line, flush=True)
 
 
 def botuser_probe(spark, reps: list[int]) -> None:
@@ -397,8 +199,6 @@ def r7ops_probe(spark, reps: list[int]) -> None:
     forms (one key-partitioned window / applyInPandas pass). Walls
     should track input volume ~linearly; superlinear growth means a
     shuffle started spilling or the Python path stopped batching."""
-    import time
-
     from big_data_song_recommendation_spark.operators.debounce import (
         debounce_gap,
         debounce_stateful,
@@ -407,8 +207,8 @@ def r7ops_probe(spark, reps: list[int]) -> None:
         dsir_scores,
     )
 
-    docs0 = load_table(spark, "/root/testdata/sf0.1", "documents")
-    ev0 = load_table(spark, "/root/testdata/sf0.1", "events")
+    docs0 = load_table(spark, SF_DIR, "documents")
+    ev0 = load_table(spark, SF_DIR, "events")
     for r in reps:
         docs = (
             replicate(docs0, r, "doc_id") if r > 1 else docs0
@@ -457,271 +257,6 @@ def r7ops_probe(spark, reps: list[int]) -> None:
             f"pandas_kept={n_pd} pandas={t_pd:.1f}s",
             flush=True,
         )
-        from big_data_song_recommendation_spark.session import (
-            release_query_state,
-        )
-
-        release_query_state(spark)
-
-
-def r7b_probe(spark, reps: list[int]) -> None:
-    """×r scaling for the round-7 batch-B operators: SCD2 run collapse
-    (one keyed window + island agg), TWAP (one shared exchange),
-    as-of attribution (union-window), expectation audit (one scan),
-    and SRP balanced sampling (bucketed GEMM + bucket window). All
-    should track input volume ~linearly; the audit should stay
-    scan-bound (flat per-row cost) and the sample output stays capped
-    at 2^planes × per_bucket rows regardless of r."""
-    import time
-
-    from big_data_song_recommendation_spark.operators.asof import asof_join
-    from big_data_song_recommendation_spark.operators.expectations import (
-        expectation_audit,
-    )
-    from big_data_song_recommendation_spark.operators.quality import (
-        srp_balanced_sample,
-    )
-    from big_data_song_recommendation_spark.operators.scd import collapse_runs
-    from big_data_song_recommendation_spark.operators.timeseries import (
-        time_weighted_avg,
-    )
-
-    ev0 = load_table(spark, "/root/testdata/sf0.1", "events")
-    ord0 = load_table(spark, "/root/testdata/sf0.1", "orders")
-    emb0 = load_table(spark, "/root/testdata/sf0.1", "embeddings")
-    for r in reps:
-        # user space grows with r so per-key run length stays constant
-        ev = (
-            replicate(ev0, r, "event_id").withColumn(
-                "user_id", F.col("user_id") * r + F.col("event_id") % r
-            )
-            if r > 1
-            else ev0
-        ).localCheckpoint()
-        orders = (
-            replicate(ord0, r, "o_orderkey") if r > 1 else ord0
-        ).localCheckpoint()
-        emb = (
-            replicate(emb0, r, "vec_id") if r > 1 else emb0
-        ).localCheckpoint()
-        n_ev, n_ord, n_emb = ev.count(), orders.count(), emb.count()
-
-        t0 = time.perf_counter()
-        n_runs = collapse_runs(
-            ev, keys=["user_id"], state_col="event_type", tiebreak="event_id"
-        ).count()
-        t_scd = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        n_twap = time_weighted_avg(
-            ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd")),
-            keys=["event_type", "day"],
-            tiebreak="event_id",
-        ).count()
-        t_twap = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        n_attr = asof_join(
-            ev.filter(F.col("event_type") == "purchase"),
-            ev.filter(F.col("event_type").isin("click", "view")),
-            on="user_id",
-            tiebreak="event_id",
-            strict=True,
-            tolerance="3 DAYS",
-            right_payload=["event_type"],
-        ).groupBy("asof_event_type").count().count()
-        t_attr = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        n_checks = expectation_audit(
-            orders,
-            [
-                ("min_rows", None, 1000),
-                ("not_null", "o_orderkey"),
-                ("unique", "o_orderkey"),
-                ("accepted", "o_orderstatus", ["F", "O", "P"]),
-                ("range", "o_totalprice", 0.0, 1e6),
-            ],
-        ).count()
-        t_audit = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        n_smp = srp_balanced_sample(emb, planes=5, per_bucket=8).count()
-        t_smp = time.perf_counter() - t0
-
-        from big_data_song_recommendation_spark.ml.evaluation import (
-            graded_ranking_metrics,
-        )
-        from big_data_song_recommendation_spark.operators.bpe import (
-            bpe_train,
-            word_frequency_table,
-        )
-        from big_data_song_recommendation_spark.operators.profile import (
-            psi_report,
-        )
-
-        # NDCG eval: popularity candidates + per-user click grades
-        t0 = time.perf_counter()
-        item = F.get_json_object("props", "$.k").cast("long")
-        pop = (
-            ev.filter(F.col("event_type") == "purchase")
-            .select(item.alias("item"))
-            .filter(F.col("item").isNotNull())
-            .groupBy("item")
-            .agg(F.count("*").alias("n"))
-        )
-        from pyspark.sql import Window as _W
-
-        cand = pop.withColumn(
-            "rnk",
-            F.row_number().over(_W.orderBy(F.desc("n"), F.asc("item"))),
-        ).filter(F.col("rnk") <= 10)
-        rel = (
-            ev.filter(F.col("event_type") == "click")
-            .select("user_id", item.alias("item"))
-            .filter(F.col("item").isNotNull())
-            .groupBy("user_id", "item")
-            .agg(F.count("*").alias("rel"))
-        )
-        n_ndcg = graded_ranking_metrics(cand, rel, k=10).count()
-        t_ndcg = time.perf_counter() - t0
-
-        # PSI drift: epoch-midpoint split of the replicated stream
-        t0 = time.perf_counter()
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-        rng = ev.agg(
-            F.min(us).alias("__mn"), F.max(us).alias("__mx")
-        ).select(
-            F.call_function(
-                "div", F.col("__mn") + F.col("__mx"), F.lit(2)
-            ).alias("__mid")
-        )
-        tagged = ev.withColumn("__us", us).crossJoin(F.broadcast(rng))
-        n_psi = psi_report(
-            tagged.filter(F.col("__us") < F.col("__mid")),
-            tagged.filter(F.col("__us") >= F.col("__mid")),
-        ).count()
-        t_psi = time.perf_counter() - t0
-
-        # BPE: corpus-grain word count scales with r; the merge rounds
-        # are vocabulary-grain (invariant under replication — the real
-        # scale axis is DISTINCT words, bounded by Heaps' law)
-        t0 = time.perf_counter()
-        docs = load_table(spark, "/root/testdata/sf0.1", "documents")
-        docs_r = (
-            replicate(docs, r, "doc_id") if r > 1 else docs
-        )
-        n_bpe = len(bpe_train(word_frequency_table(docs_r), n_merges=4)[0])
-        t_bpe = time.perf_counter() - t0
-
-        print(
-            f"x{r}: events={n_ev} runs={n_runs} scd={t_scd:.1f}s "
-            f"twap_rows={n_twap} twap={t_twap:.1f}s attr={t_attr:.1f}s | "
-            f"orders={n_ord} checks={n_checks} audit={t_audit:.1f}s | "
-            f"emb={n_emb} sampled={n_smp} smp={t_smp:.1f}s | "
-            f"ndcg_users={n_ndcg} ndcg={t_ndcg:.1f}s "
-            f"psi_bins={n_psi} psi={t_psi:.1f}s "
-            f"bpe_rules={n_bpe} bpe={t_bpe:.1f}s",
-            flush=True,
-        )
-        from big_data_song_recommendation_spark.session import (
-            release_query_state,
-        )
-
-        release_query_state(spark)
-
-
-def r7c_probe(spark, reps: list[int]) -> None:
-    """×r scaling for the round-7 batch-C operators: BM25 (one
-    tokenize pass + TakeOrdered — wall tracks corpus volume), KMV
-    audience overlap (one distinct shuffle + bounded sketch math),
-    edit-distance pairs (fact rows grow ×r but the VALUE grain — 64
-    distinct names — is constant, so the pair space and wall must stay
-    flat after the first aggregate), and embedding centroid drift
-    (one posexplode + (group,dim)-grain aggregate per side — the sums
-    table is groups×dims rows at any corpus size)."""
-    import time
-
-    from big_data_song_recommendation_spark.operators.profile import (
-        embedding_centroid_drift,
-    )
-    from big_data_song_recommendation_spark.operators.retrieval import (
-        bm25_topk,
-    )
-    from big_data_song_recommendation_spark.operators.similarity import (
-        edit_distance_pairs,
-    )
-
-    docs0 = load_table(spark, "/root/testdata/sf0.1", "documents")
-    ev0 = load_table(spark, "/root/testdata/sf0.1", "events")
-    part0 = load_table(spark, "/root/testdata/sf0.1", "part")
-    emb0 = load_table(spark, "/root/testdata/sf0.1", "embeddings")
-    for r in reps:
-        docs = (
-            replicate(docs0, r, "doc_id") if r > 1 else docs0
-        ).localCheckpoint()
-        # user space grows with r (overlap structure preserved)
-        ev = (
-            replicate(ev0, r, "event_id").withColumn(
-                "user_id", F.col("user_id") * r + F.col("event_id") % r
-            )
-            if r > 1
-            else ev0
-        ).localCheckpoint()
-        part = (
-            replicate(part0, r, "p_partkey") if r > 1 else part0
-        ).localCheckpoint()
-        emb = (
-            replicate(emb0, r, "vec_id") if r > 1 else emb0
-        ).localCheckpoint()
-        n_docs, n_ev, n_part, n_emb = (
-            docs.count(), ev.count(), part.count(), emb.count(),
-        )
-
-        t0 = time.perf_counter()
-        n_bm = bm25_topk(docs, ["dup", "key", "vector"], k=10).count()
-        t_bm = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        from big_data_song_recommendation_spark.operators.sketches import (
-            kmv_distinct_estimate,
-            kmv_sketch,
-        )
-
-        sk = kmv_sketch(ev, "user_id", group=["event_type"], k=64)
-        n_kmv = (
-            sk.groupBy("event_type")
-            .agg(F.count("*").alias("n"), F.max("h").alias("hk"))
-            .select(
-                kmv_distinct_estimate(F.col("n"), F.col("hk"), k=64)
-            )
-            .count()
-        )
-        t_kmv = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        n_pairs = edit_distance_pairs(part, "p_name", max_dist=2).count()
-        t_ed = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        n_drift = embedding_centroid_drift(
-            emb.filter(F.col("vec_id") % 2 == 0),
-            emb.filter(F.col("vec_id") % 2 != 0),
-            group=["label"],
-        ).count()
-        t_dr = time.perf_counter() - t0
-
-        print(
-            f"x{r}: docs={n_docs} bm25_top={n_bm} bm25={t_bm:.1f}s | "
-            f"events={n_ev} kmv_types={n_kmv} kmv={t_kmv:.1f}s | "
-            f"parts={n_part} typo_pairs={n_pairs} editdist={t_ed:.1f}s | "
-            f"emb={n_emb} drift_groups={n_drift} drift={t_dr:.1f}s",
-            flush=True,
-        )
-        from big_data_song_recommendation_spark.session import (
-            release_query_state,
-        )
-
         release_query_state(spark)
 
 
@@ -747,19 +282,16 @@ def r8ops_probe(spark, reps: list[int]) -> None:
       (30k sequential jobs). Rounds (= driver actions) must grow
       far slower than merges under batched selection.
     """
-    import time
-
     from big_data_song_recommendation_spark.operators import bpe
     from big_data_song_recommendation_spark.operators.dedup import (
+        _prefix_candidates,
+        _shingle_sets,
         prefix_filter_jaccard_pairs,
     )
     from big_data_song_recommendation_spark.operators.sketches import (
         BloomParams,
         bloom_bits,
         bloom_probe,
-    )
-    from big_data_song_recommendation_spark.session import (
-        release_query_state,
     )
 
     docs0 = load_table(spark, SF_DIR, "documents")
@@ -786,11 +318,6 @@ def r8ops_probe(spark, reps: list[int]) -> None:
         ).count()
         t_pf = time.perf_counter() - t0
         # candidate tiers: AllPairs baseline vs PPJoin positional
-        from big_data_song_recommendation_spark.operators.dedup import (
-            _prefix_candidates,
-            _shingle_sets,
-        )
-
         _sets = _shingle_sets(
             salted, "doc_id", "text", 3, None
         ).localCheckpoint()
@@ -886,17 +413,10 @@ def r9ops_probe(spark, reps: list[int]) -> None:
     (Multi-probe SRP recall is covered per-SF by q165's oracle, and
     its candidate growth is bounded ×(planes+1) by construction.)
     """
-    import time
-
-    from pyspark.sql import functions as F
-
     from big_data_song_recommendation_spark.operators.retrieval import (
         bm25_topk_indexed,
         build_bm25_index,
         merge_bm25_index,
-    )
-    from big_data_song_recommendation_spark.session import (
-        release_query_state,
     )
 
     docs0 = load_table(spark, SF_DIR, "documents")
@@ -939,114 +459,11 @@ def r9ops_probe(spark, reps: list[int]) -> None:
         release_query_state(spark)
 
 
-def r10ops_probe(spark, reps: list[int]) -> None:
-    """×r scaling for the round-10 IVF+PQ composition (q173's
-    operator + its persisted serving layout):
-
-    - the ADC candidate scan must touch ~nprobe/K of the corpus at
-      every r (committed K=16 coarse centroids, nprobe=4 → ~25%),
-      while the linear pq_adc_topk baseline touches 100% — the
-      constant-fraction cut PQ's compression then multiplies (M bytes
-      vs dim doubles per scanned row). True sub-linear growth comes
-      from scaling n_centroids with the corpus (√n rule) — committed
-      artifacts pin K here, so the claim measured is the FRACTION,
-      not the exponent, and it must hold flat across r.
-    - indexed probe wall (ivfpq_topk_indexed, fixed 8-probe batch)
-      must track the routed cells' rows (≈ corpus/4), not the corpus,
-      and merge must stay delta-grain while rebuild tracks the corpus
-      (merged == rebuilt checked exactly at every r).
-
-    Replicas perturb one component per replica so vectors are
-    distinct (no degenerate all-tie ranks) while cell geometry stays
-    comparable.
-    """
-    import time
-
-    from pyspark.sql import functions as F
-
-    from big_data_song_recommendation_spark.ml.centroids import IVF_CENTROIDS
-    from big_data_song_recommendation_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivf_pq_topk,
-        ivfpq_topk_indexed,
-        merge_ivfpq_index,
-        pq_adc_topk,
-    )
-    from big_data_song_recommendation_spark.session import (
-        release_query_state,
-    )
-
-    emb0 = load_table(spark, SF_DIR, "embeddings")
-    for r in reps:
-        emb = (
-            replicate(emb0, r, "vec_id").withColumn(
-                "embedding",
-                F.expr(
-                    f"transform(embedding, (x, i) -> CASE WHEN i = 0 "
-                    f"THEN x + (vec_id % {r}) * 0.001 ELSE x END)"
-                ),
-            )
-            if r > 1
-            else emb0
-        ).localCheckpoint()
-        n = emb.count()
-        probes = emb.filter(F.col("vec_id") < 8)
-
-        t0 = time.perf_counter()
-        rows = ivf_pq_topk(
-            emb, probes, IVF_CENTROIDS, k=3, nprobe=4, candidates=20
-        ).collect()
-        t_ivfpq = time.perf_counter() - t0
-        scanned = {x.n_scanned for x in rows}
-        frac = max(scanned) / n
-
-        t0 = time.perf_counter()
-        pq_adc_topk(emb, probes, k=3).collect()
-        t_linear = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        tables = build_ivfpq_index(emb, name="probe_r10", n_buckets=8)
-        t_build = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        got = sorted(
-            tuple(x)
-            for x in ivfpq_topk_indexed(
-                spark, list(range(8)), name="probe_r10", k=3, nprobe=4
-            ).collect()
-        )
-        t_serve = time.perf_counter() - t0
-        assert got == sorted(tuple(x) for x in rows), f"x{r}: indexed != in-session"
-
-        base = emb.filter(F.col("vec_id") % 10 != 0)
-        delta = emb.filter(F.col("vec_id") % 10 == 0)
-        t2 = build_ivfpq_index(base, name="probe_r10m", n_buckets=8)
-        t0 = time.perf_counter()
-        merge_ivfpq_index(delta, name="probe_r10m", check_new_ids=False)
-        t_merge = time.perf_counter() - t0
-        merged = sorted(
-            tuple(x) for x in spark.table("probe_r10m_codes").collect()
-        )
-        rebuilt = sorted(
-            tuple(x) for x in spark.table("probe_r10_codes").collect()
-        )
-        assert merged == rebuilt, f"x{r}: merged != rebuilt"
-        for t in list(tables.values()) + list(t2.values()):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        print(
-            f"x{r}: n={n} scanned_frac={frac:.3f} ivfpq={t_ivfpq:.1f}s"
-            f" linear_adc={t_linear:.1f}s build={t_build:.1f}s"
-            f" serve8={t_serve:.2f}s merge={t_merge:.1f}s"
-            f" merged_eq=True",
-            flush=True,
-        )
-        release_query_state(spark)
-
-
 def r11ops_probe(spark, reps: list[int]) -> None:
     """×r scaling for the K ∝ √n IVF retrain path (VERDICT r10 #3).
-    r10ops pinned the FIXED-K story: scanned fraction flat at
-    ~nprobe/K, i.e. scanned ROWS growing linearly with the corpus.
-    This probe closes the loop — retrain the coarse centroids with
+    With a FIXED K the scanned fraction stays flat at ~nprobe/K, i.e.
+    scanned ROWS grow linearly with the corpus. This probe closes the
+    loop — retrain the coarse centroids with
     K = K₀·√r at each replication (train_ivf_centroids, the
     distributed integer Lloyd) and show:
 
@@ -1057,20 +474,12 @@ def r11ops_probe(spark, reps: list[int]) -> None:
       corpus outgrows the build-time size and recommends the √(n·
       nprobe) K the retrain then uses.
     """
-    import math
-    import time
-
-    from pyspark.sql import functions as F
-
     from big_data_song_recommendation_spark.operators.similarity import (
         build_ivfpq_index,
         ivf_pq_topk,
         ivfpq_rebuild_advice,
         merge_ivfpq_index,
         train_ivf_centroids,
-    )
-    from big_data_song_recommendation_spark.session import (
-        release_query_state,
     )
 
     K0, NPROBE = 16, 4
@@ -1147,56 +556,6 @@ def r11ops_probe(spark, reps: list[int]) -> None:
         release_query_state(spark)
 
 
-def spans_probe(spark, reps: list[int]) -> None:
-    """×r scaling for exact-substring duplicate spans (q156): salted
-    replicas (the r8ops trick — a per-replica token interleaved
-    between original tokens) keep every within-replica duplicate
-    relationship while making cross-replica k-grams disjoint, so
-    flagged spans grow LINEARLY in r and the wall must track the
-    shingle-count shuffle, not a duplicate explosion."""
-    import time
-
-    from big_data_song_recommendation_spark.operators.dedup import (
-        duplicated_spans,
-    )
-    from big_data_song_recommendation_spark.session import (
-        release_query_state,
-    )
-
-    docs0 = load_table(spark, SF_DIR, "documents")
-    for r in reps:
-        salted = (
-            replicate(docs0, r, "doc_id").withColumn(
-                "text",
-                F.expr(
-                    "array_join(flatten(transform("
-                    "  split(lower(text), '[^a-z0-9]+'),"
-                    f"  x -> array(x, concat('zz', doc_id % {r})))), ' ')"
-                ),
-            )
-            if r > 1
-            else docs0
-        ).localCheckpoint()
-        n_docs = salted.count()
-        t0 = time.perf_counter()
-        agg = (
-            duplicated_spans(salted, "doc_id", "text", k=8)
-            .agg(
-                F.sum("n_dup_spans").alias("spans"),
-                F.sum("dup_tokens").alias("dup_toks"),
-                F.count("*").alias("docs"),
-            )
-            .collect()[0]
-        )
-        wall = time.perf_counter() - t0
-        print(
-            f"x{r}: docs={n_docs} dup_spans={agg['spans']}"
-            f" dup_tokens={agg['dup_toks']} wall={wall:.1f}s",
-            flush=True,
-        )
-        release_query_state(spark)
-
-
 def admission_probe(spark, reps: list[int]) -> None:
     """×r scaling for the MinHash near-dup ADMISSION path: the corpus
     (salted replicas — cross-replica shingles disjoint, so the true
@@ -1216,8 +575,6 @@ def admission_probe(spark, reps: list[int]) -> None:
     fixed probes likewise (it is the compressed SCAN stage by design —
     compose with IVF routing for sub-linearity).
     """
-    import time
-
     from big_data_song_recommendation_spark.operators.dedup import (
         build_minhash_index,
         merge_minhash_index,
@@ -1226,9 +583,6 @@ def admission_probe(spark, reps: list[int]) -> None:
     from big_data_song_recommendation_spark.operators.similarity import (
         pq_adc_topk,
         pq_encode,
-    )
-    from big_data_song_recommendation_spark.session import (
-        release_query_state,
     )
 
     docs0 = load_table(spark, SF_DIR, "documents")
@@ -1295,120 +649,30 @@ def admission_probe(spark, reps: list[int]) -> None:
         release_query_state(spark)
 
 
+MODES = {
+    "botuser": botuser_probe,
+    "skew": skew_probe,
+    "r7ops": r7ops_probe,
+    "r8ops": r8ops_probe,
+    "r9ops": r9ops_probe,
+    "r11ops": r11ops_probe,
+    "admission": admission_probe,
+}
+
+
 def main() -> None:
-    args = sys.argv[1:]
-    mode = "dedup"
-    modes = (
-        "dedup", "relational", "curation", "r4ops", "ranks",
-        "botuser", "skew", "r7ops", "r7b", "r7c", "r8ops", "spans", "r9ops",
-        "admission", "r10ops", "r11ops",
-    )
-    if args and args[0] in modes:
-        mode, args = args[0], args[1:]
-    reps = [int(a) for a in args] or [1, 4, 16]
+    mode, *args = sys.argv[1:] or [""]
+    if mode not in MODES or not all(a.isdigit() and int(a) > 0 for a in args):
+        sys.exit(
+            "usage: python scripts/scale_probe.py "
+            f"{{{'|'.join(MODES)}}} [replications ...]"
+        )
     spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    if mode == "relational":
-        relational_probe(spark, reps)
+    try:
+        MODES[mode](spark, [int(a) for a in args] or [1, 4, 16])
+    finally:
         spark.stop()
-        return
-    if mode == "curation":
-        curation_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "r4ops":
-        r4ops_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "ranks":
-        ranks_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "botuser":
-        botuser_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "skew":
-        skew_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "r7ops":
-        r7ops_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "r7b":
-        r7b_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "r7c":
-        r7c_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "r8ops":
-        r8ops_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "spans":
-        spans_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "r9ops":
-        r9ops_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "r10ops":
-        r10ops_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "r11ops":
-        r11ops_probe(spark, reps)
-        spark.stop()
-        return
-    if mode == "admission":
-        admission_probe(spark, reps)
-        spark.stop()
-        return
-    docs0 = load_table(spark, "/root/testdata/sf0.1", "documents")
-    emb0 = load_table(spark, "/root/testdata/sf0.1", "embeddings")
-
-    with tempfile.TemporaryDirectory() as d:
-        for r in reps:
-            docs_path, emb_path = f"{d}/docs_{r}", f"{d}/emb_{r}"
-            replicate(docs0, r, "doc_id").write.mode("overwrite").parquet(docs_path)
-            replicate(emb0, r, "vec_id").write.mode("overwrite").parquet(emb_path)
-            docs = spark.read.parquet(docs_path)
-            emb = spark.read.parquet(emb_path)
-            n_docs, n_emb = docs.count(), emb.count()
-
-            t0 = time.perf_counter()
-            pairs = dedup.minhash_lsh_pairs(
-                docs, "doc_id", "text", num_hashes=32, bands=8, k=3
-            ).localCheckpoint()
-            n_lsh = pairs.count()
-            t_lsh = time.perf_counter() - t0
-
-            # pair→cluster resolution over the (quadratically growing)
-            # LSH output: replication makes copy-groups r·k-cliques, so
-            # min-label propagation should converge in ~2 rounds however
-            # large r gets — wall should track pair volume, not rounds
-            t0 = time.perf_counter()
-            comp = dedup.connected_components(pairs)
-            n_comp = comp.select("comp").distinct().count()
-            t_cc = time.perf_counter() - t0
-
-            t0 = time.perf_counter()
-            n_gemm = dedup.embedding_dup_pairs_blocked(
-                emb, "vec_id", "embedding", threshold=0.4
-            ).count()
-            t_gemm = time.perf_counter() - t0
-
-            print(
-                f"x{r}: docs={n_docs} lsh_pairs={n_lsh} lsh={t_lsh:.1f}s "
-                f"clusters={n_comp} cc={t_cc:.1f}s | "
-                f"emb={n_emb} gemm_pairs={n_gemm} gemm={t_gemm:.1f}s",
-                flush=True,
-            )
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -23,6 +23,12 @@ from oracle_sweep import compare, normalize  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_collection_modifyitems(items):
+    # the type-class contract re-checks the schemas the oracle-parity
+    # tests kept from the plans they built: run it after them
+    items.sort(key=lambda item: "test_dtype_contract.py::" in item.nodeid)
+
+
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
     # a per-run warehouse: managed tables a killed run left behind can

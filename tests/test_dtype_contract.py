@@ -7,8 +7,13 @@ the roster convention — returns `double`).  Values were numerically
 identical; the normalize/hash compare still failed because the two
 classes stringify differently ("123.40" vs "123.4").  This test catches
 that class *without executing anything*: Spark `.schema` is pure plan
-analysis and DuckDB `DESCRIBE <sql>` types a query without running it,
-so the whole roster checks in seconds.
+analysis and DuckDB `DESCRIBE <sql>` types a query without running it.
+
+`tests/test_oracle_parity.py::test_query_matches_oracle` asserts the
+contract first, on the plan it then executes, and keeps each schema in
+``SCHEMAS``; the per-query test here re-checks that schema (conftest
+runs this module after the parity tests), so each oracle query's plan
+is built once per run. Run alone, it builds the plans itself.
 
 Classes (not exact types) are compared because the value-hash gate
 itself only distinguishes classes: int widths stringify identically,
@@ -19,6 +24,7 @@ but int vs float ("5" vs "5.0"), decimal vs double ("123.40" vs
 from __future__ import annotations
 
 import pytest
+from pyspark.sql.types import StructType
 
 from big_data_song_recommendation_spark.plans import ORACLES, QUERIES
 
@@ -66,12 +72,20 @@ def _duck_class(decl: str) -> str:
     return d.lower()
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_output_type_classes_match_oracle(spark, duck, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    got = {f.name: _spark_class(f.dataType.simpleString()) for f in sdf.schema}
+# query name -> output schema of the plan test_query_matches_oracle built
+SCHEMAS: dict[str, StructType] = {}
+
+
+def assert_type_classes(schema: StructType, duck, name: str) -> None:
+    got = {f.name: _spark_class(f.dataType.simpleString()) for f in schema}
     desc = duck.execute(f"DESCRIBE {ORACLES[name]}").fetchall()
     want = {row[0]: _duck_class(row[1]) for row in desc}
     assert got == want, (
         f"{name}: output type-class mismatch\n spark:  {got}\n oracle: {want}"
     )
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_output_type_classes_match_oracle(spark, duck, name):
+    schema = SCHEMAS.get(name) or QUERIES[name](spark, SF_DIR).schema
+    assert_type_classes(schema, duck, name)

@@ -97,7 +97,7 @@ def test_scorer_plan_is_map_only(spark):
     docs = load_table(spark, SF_DIR, "documents")
     q = langid_model_scores(docs, LID_WEIGHTS_MICRO, LID_BIASES_MICRO)
     plan = q._jdf.queryExecution().executedPlan().toString()
-    # the only Exchange allowed is load_table's round-robin widen of
+    # the only Exchange allowed is load_table's round-robin spread of
     # the narrow toy input — the scorer itself adds NO shuffle
     assert "hashpartitioning" not in plan and "rangepartitioning" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

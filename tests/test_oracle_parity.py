@@ -10,12 +10,17 @@ from big_data_song_recommendation_spark.plans import ORACLES, QUERIES
 from oracle_sweep import FIELDS, check
 
 from .conftest import SF_DIR, assert_matches_oracle
+from .test_dtype_contract import SCHEMAS, assert_type_classes
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
     assert name in QUERIES, f"oracle {name} has no spark query"
     df = QUERIES[name](spark, SF_DIR)
+    # output type classes first: a decimal/double or int/float slip
+    # fails the value hash below with a far less readable diff
+    SCHEMAS[name] = df.schema
+    assert_type_classes(df.schema, duck, name)
     assert_matches_oracle(df, duck, ORACLES[name], name)
 
 

@@ -94,8 +94,9 @@ def test_scorer_plan_is_map_only(spark):
     plan = quality_model_scores(
         docs, QCLF_WEIGHTS_MICRO, QCLF_BIAS_MICRO, carry_cols=["lang"]
     )._jdf.queryExecution().executedPlan().toString()
-    # load_table's widen() adds one scan-side round-robin repartition;
-    # the OPERATOR itself must add no shuffle (no hash/range exchange)
+    # load_table's narrow-layout spread adds one scan-side round-robin
+    # repartition; the OPERATOR itself must add no shuffle (no
+    # hash/range exchange)
     assert "Exchange hashpartitioning" not in plan
     assert "Exchange rangepartitioning" not in plan
     assert "BatchEvalPython" not in plan

@@ -55,8 +55,15 @@ def test_scoped_release_keeps_service_cache(spark):
 
 def test_global_release_clears_everything(spark):
     QUERIES["q99_revenue_gini"](spark, SF_DIR).collect()
-    release_query_state(spark)
+    pinned = _persistent_ids(spark)
+    cached = spark.range(100).withColumnRenamed("id", "k").cache()
+    cached.count()
+    assert len(_persistent_ids(spark) - pinned) == 1
+    # the catalog-cached RDD counts once: clearCache() frees it, the
+    # unpersist loop must not free it again
+    assert release_query_state(spark) == len(pinned) + 1
     assert _persistent_ids(spark) == set()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # evicted plans rebuild transparently
     assert QUERIES["q99_revenue_gini"](spark, SF_DIR).count() > 0
     release_query_state(spark)
