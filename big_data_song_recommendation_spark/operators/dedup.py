@@ -1935,7 +1935,7 @@ def merge_minhash_index(
     suspicious path (an intent marker without a commit marker — see
     ``streaming.jobs.CurationSink``); the steady-state merge stays
     scan-free."""
-    from .retrieval import _bucket_count
+    from ..sources.bucketing import append_bucketed
 
     spark = delta_docs.sparkSession
     tables = {s: f"{name}_{s}" for s in ("bands", "sigs", "meta")}
@@ -1985,20 +1985,8 @@ def merge_minhash_index(
         band_rows = band_rows.join(
             spark.table(tables["bands"]).select(idc), idc, "left_anti"
         )
-    (
-        band_rows.write.format("parquet")
-        .mode("append")
-        .bucketBy(_bucket_count(spark, tables["bands"]), "key")
-        .sortBy("key")
-        .saveAsTable(tables["bands"])
-    )
-    (
-        sig.write.format("parquet")
-        .mode("append")
-        .bucketBy(_bucket_count(spark, tables["sigs"]), idc)
-        .sortBy(idc)
-        .saveAsTable(tables["sigs"])
-    )
+    append_bucketed(band_rows, tables["bands"])
+    append_bucketed(sig, tables["sigs"])
 
 
 def admission_verify_exact(

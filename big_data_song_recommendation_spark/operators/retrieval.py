@@ -338,15 +338,6 @@ def bm25_topk_indexed_many(
     )
 
 
-def _bucket_count(spark, table: str) -> int:
-    """Bucket count of a catalog table (DESCRIBE EXTENDED), so merges
-    can match the existing spec instead of trusting a caller param."""
-    for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect():
-        if r["col_name"] == "Num Buckets":
-            return int(r["data_type"])
-    raise RuntimeError(f"_bucket_count: {table!r} is not bucketed")
-
-
 def merge_bm25_index(
     delta_docs: DataFrame,
     *,
@@ -363,8 +354,11 @@ def merge_bm25_index(
 
     - ``{name}_postings``: the delta's ``(tok, id, tf, dl)`` rows
       APPEND into the bucketed table with the EXISTING bucket spec
-      (bucket pruning is preserved — each bucket just gains files;
-      compact with ``sources.layout`` on the usual cadence);
+      (``sources.bucketing.append_bucketed``: bucket pruning is
+      preserved, and the write adds at most ``n_buckets`` files — one
+      write task per bucket — so each bucket gains one file per merge;
+      compact with ``sources.bucketing.compact_bucketed_table`` on the
+      usual cadence);
     - ``{name}_terms``: per-token df ADDS — union + re-aggregate at
       delta-vocabulary grain, written to a staging table and swapped
       in by a metadata-only rename (Spark refuses to overwrite a
@@ -397,6 +391,8 @@ def merge_bm25_index(
     negative postings here (rank windows are not retractable the way
     sums are): rebuild the affected docs via filtered rebuild instead.
     """
+    from ..sources.bucketing import append_bucketed
+
     spark = delta_docs.sparkSession
     tables = {s: f"{name}_{s}" for s in ("postings", "terms", "totals")}
     for t in tables.values():
@@ -404,7 +400,6 @@ def merge_bm25_index(
             raise RuntimeError(
                 f"merge_bm25_index: {t!r} missing — build_bm25_index first"
             )
-    n_buckets = _bucket_count(spark, tables["postings"])
     if idempotent:
         delta_docs = delta_docs.join(
             spark.table(tables["postings"]).select(id_col),
@@ -436,13 +431,7 @@ def merge_bm25_index(
     dl = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
     tf = toks.groupBy(id_col, "tok").agg(F.count("*").alias("tf"))
     postings_delta = tf.join(dl, id_col).select("tok", id_col, "tf", "dl")
-    (
-        postings_delta.write.format("parquet")
-        .mode("append")
-        .bucketBy(n_buckets, "tok")
-        .sortBy("tok")
-        .saveAsTable(tables["postings"])
-    )
+    append_bucketed(postings_delta, tables["postings"])
     if idempotent:
         # Replay mode never trusts the additive merge: the crash being
         # reconciled may sit anywhere between the postings append and

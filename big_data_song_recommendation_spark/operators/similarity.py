@@ -1316,7 +1316,7 @@ def maintain_ivfpq_index(
     new_books = (
         residual_codebooks_fn(corpus, new_cents) if residual else codebooks
     )
-    from .retrieval import _bucket_count
+    from ..sources.bucketing import bucket_spec
 
     build_ivfpq_index(
         corpus,
@@ -1325,7 +1325,7 @@ def maintain_ivfpq_index(
         coarse_centroids=new_cents,
         codebooks=new_books,
         name=name,
-        n_buckets=_bucket_count(spark, f"{name}_codes"),
+        n_buckets=bucket_spec(spark, f"{name}_codes")[0],
         residual=residual,
     )
     corpus.unpersist()
@@ -1847,9 +1847,9 @@ def merge_srp_index(
     deterministic hyperplanes (md5 signs keyed by the meta row's
     ``planes`` — no RNG state to carry forward). So the merge is just
     two bucketed APPENDs under the existing bucket specs: pruning is
-    preserved (each bucket gains files; compact on the
-    ``sources.layout`` cadence), and merged == rebuilt holds
-    BIT-EXACTLY — test-pinned, not only argued.
+    preserved (each bucket gains one file per merge; compact with
+    ``sources.bucketing.compact_bucketed_table``), and merged ==
+    rebuilt holds BIT-EXACTLY — test-pinned, not only argued.
 
     Insert-only: a re-ingested id would come back twice from the
     candidate read, so delta ids are anti-checked against
@@ -1864,7 +1864,7 @@ def merge_srp_index(
     bucket rows. Updates/deletes have no retraction story in this
     layout — rebuild the affected vectors.
     """
-    from .retrieval import _bucket_count
+    from ..sources.bucketing import append_bucketed
 
     spark = delta.sparkSession
     tables = {s: f"{name}_{s}" for s in ("by_bucket", "by_id", "meta")}
@@ -1922,7 +1922,7 @@ def merge_srp_index(
     if label_col is not None:
         cols.append(F.col(label_col).alias("lbl"))
     rows = delta.select(*cols).join(sigs, idc)
-    for t, key in (("by_bucket", "bucket"), ("by_id", idc)):
+    for t in ("by_bucket", "by_id"):
         out = rows
         if idempotent:
             # per-table reconcile (the merge_ivfpq_index discipline):
@@ -1932,13 +1932,7 @@ def merge_srp_index(
             out = rows.join(
                 spark.table(tables[t]).select(idc), idc, "left_anti"
             )
-        (
-            out.write.format("parquet")
-            .mode("append")
-            .bucketBy(_bucket_count(spark, tables[t]), key)
-            .sortBy(key)
-            .saveAsTable(tables[t])
-        )
+        append_bucketed(out, tables[t])
 
 
 def _srp_meta(spark, name: str, *, fresh: bool = False):
@@ -2390,7 +2384,7 @@ def merge_ivfpq_index(
     closing the crash window BETWEEN the two appends (a guard-only
     replay would re-append codes there, and duplicate code rows pass
     the ADC/rerank windows as repeated neighbor_id entries)."""
-    from .retrieval import _bucket_count
+    from ..sources.bucketing import append_bucketed
 
     spark = delta.sparkSession
     tables = {s: f"{name}_{s}" for s in ("codes", "by_id", "meta")}
@@ -2434,7 +2428,7 @@ def merge_ivfpq_index(
     enc, by_id = _ivfpq_rows(
         delta, idc, vec_col, coarse_centroids, codebooks, dim, residual
     )
-    for df, t, key in ((enc, "codes", "cluster"), (by_id, "by_id", idc)):
+    for df, t in ((enc, "codes"), (by_id, "by_id")):
         if idempotent:
             # per-table reconcile: rows this table already holds are
             # anti-joined out, so a replay of a crash BETWEEN the two
@@ -2442,13 +2436,7 @@ def merge_ivfpq_index(
             df = df.join(
                 spark.table(tables[t]).select(idc), idc, "left_anti"
             )
-        (
-            df.write.format("parquet")
-            .mode("append")
-            .bucketBy(_bucket_count(spark, tables[t]), key)
-            .sortBy(key)
-            .saveAsTable(tables[t])
-        )
+        append_bucketed(df, tables[t])
 
 
 def _fits_broadcast(df: DataFrame) -> bool:

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .bucketing import write_bucketed
+
 
 def write_parquet(
     df: DataFrame,
@@ -51,15 +53,16 @@ def write_bucketed_table(
     mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table: rows are hash-clustered into
-    ``n_buckets`` files per partition at WRITE time, so equi-joins and
+    ``n_buckets`` files at WRITE time, so equi-joins and
     aggregations on ``bucket_by`` between co-bucketed tables need no
     shuffle at READ time — the join amortizes its exchange into the
     write, the right trade for fact tables joined repeatedly on the
-    same key at 100 TB."""
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_by)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.saveAsTable(table)
+    same key at 100 TB. Written by :func:`.bucketing.write_bucketed`,
+    one file per bucket."""
+    write_bucketed(
+        df, table, bucket_by, n_buckets=n_buckets,
+        sort=[sort_by] if sort_by else False, mode=mode,
+    )
 
 
 def write_orc(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
