@@ -1551,18 +1551,6 @@ def _band_keys_sql(num_hashes: int, bands: int) -> str:
     ) + ")"
 
 
-#: per-(session, index-name) metadata memo — one immutable row per
-#: build; the _srp_meta_memo discipline (rebuilds pop the key).
-_mh_meta_memo: dict = {}
-
-
-def _mh_meta(spark, name: str, *, fresh: bool = False):
-    key = (id(spark), name)
-    if fresh or key not in _mh_meta_memo:
-        _mh_meta_memo[key] = spark.table(f"{name}_meta").collect()[0]
-    return _mh_meta_memo[key]
-
-
 def build_minhash_index(
     corpus: DataFrame,
     *,
@@ -1597,7 +1585,7 @@ def build_minhash_index(
     (src/data_processor.py:71); this is the near-dup upgrade at
     corpus scale.
     """
-    from ..sources.bucketing import write_bucketed
+    from ..sources.bucketing import finish_index_build, write_bucketed
 
     if num_hashes % bands:
         raise ValueError("build_minhash_index: bands must divide num_hashes")
@@ -1619,21 +1607,12 @@ def build_minhash_index(
         n_buckets=n_buckets,
     )
     write_bucketed(sig, tables["sigs"], id_col, n_buckets=n_buckets)
-    from ..sources.readers import local_frame
-
-    local_frame(
-        spark,
-        [(num_hashes, bands, k, id_col)],
-        "num_hashes int, bands int, k int, id_col string",
-    ).write.format("parquet").mode("overwrite").saveAsTable(tables["meta"])
     sig.unpersist()
-    for t in ("bands", "sigs"):
-        if not spark.catalog.tableExists(tables[t]):
-            raise RuntimeError(
-                f"build_minhash_index: bucketed table {tables[t]!r} missing "
-                "from the catalog after write — check the warehouse dir"
-            )
-    _mh_meta_memo.pop((id(spark), name), None)
+    finish_index_build(
+        spark, name, tables, op="build_minhash_index",
+        meta=((num_hashes, bands, k, id_col),
+              "num_hashes int, bands int, k int, id_col string"),
+    )
     return tables
 
 
@@ -1681,10 +1660,12 @@ def near_dup_probe(
     survivors to :func:`jaccard_pairs_from_sets` or the prefix-filter
     join — the q20 two-tier discipline.
     """
+    from ..sources.bucketing import index_meta
+
     spark = new_docs.sparkSession
     # the per-session memo: build_minhash_index drops it on a rebuild,
     # so a probe never signs with a replaced index's hash family
-    meta = _mh_meta(spark, name)
+    meta = index_meta(spark, name)
     idc, nh, bands = meta["id_col"], int(meta["num_hashes"]), int(meta["bands"])
     if idc not in new_docs.columns:
         raise ValueError(f"near_dup_probe: probe batch lacks id col {idc!r}")
@@ -1918,56 +1899,25 @@ def merge_minhash_index(
     idempotent: bool = False,
 ) -> None:
     """Fold NEW documents into a persisted MinHash index — insert-only
-    incremental maintenance (the merge_bm25_index / merge_srp_index
-    discipline): signatures and band rows are pure functions of each
-    document and the meta row's fixed hash family, so the merge is two
-    bucketed APPENDs under the existing specs and merged == rebuilt
-    holds bit-exactly (test-pinned). Delta ids are anti-checked
-    against ``{name}_sigs`` by default (an id re-ingested would
-    double-report candidates); updates/deletes → rebuild affected
-    docs.
+    incremental maintenance under the protocol of
+    ``sources.bucketing.insert_only_delta`` (``check_new_ids`` and
+    ``idempotent`` are its steady-state and replay modes): signatures
+    and band rows are pure functions of each document and the meta
+    row's fixed hash family, so the merge is two bucketed APPENDs under
+    the existing specs and merged == rebuilt holds bit-exactly
+    (test-pinned). Delta ids are checked against ``{name}_sigs``, the
+    table appended last (an id re-ingested would double-report
+    candidates)."""
+    from ..sources.bucketing import append_bucketed, index_meta, insert_only_delta
 
-    ``idempotent=True`` makes the merge a safe REPLAY: instead of
-    raising on overlap, already-indexed ids are anti-joined OUT of the
-    delta, so re-running the same merge after a crash between the
-    append and its commit marker inserts nothing twice. Costs one
-    delta-vs-sigs anti-join, so streaming callers reserve it for the
-    suspicious path (an intent marker without a commit marker — see
-    ``streaming.jobs.CurationSink``); the steady-state merge stays
-    scan-free."""
-    from ..sources.bucketing import append_bucketed
-
-    spark = delta_docs.sparkSession
-    tables = {s: f"{name}_{s}" for s in ("bands", "sigs", "meta")}
-    for t in tables.values():
-        if not spark.catalog.tableExists(t):
-            raise RuntimeError(
-                f"merge_minhash_index: {t!r} missing — build_minhash_index first"
-            )
-    # fresh read (not the probe memo): merging on a stale meta for a
-    # rebuilt same-name index would mix hash families
-    meta = _mh_meta(spark, name, fresh=True)
+    delta_docs = insert_only_delta(
+        delta_docs, name, ("bands", "sigs", "meta"), op="merge_minhash_index",
+        guard="sigs", check_new_ids=check_new_ids, idempotent=idempotent,
+    )
+    if delta_docs is None:
+        return
+    meta = index_meta(delta_docs.sparkSession, name)  # insert_only_delta read it fresh
     idc, nh = meta["id_col"], int(meta["num_hashes"])
-    if idempotent:
-        delta_docs = delta_docs.join(
-            spark.table(tables["sigs"]).select(idc), idc, "left_anti"
-        )
-        if delta_docs.limit(1).isEmpty():
-            return
-    elif check_new_ids:
-        dup = (
-            spark.table(tables["sigs"])
-            .select(idc)
-            .join(delta_docs.select(idc), idc, "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "merge_minhash_index: delta contains ids already indexed — "
-                "insert-only maintenance would double-report candidates; "
-                "dedup upstream or rebuild"
-            )
     sig = minhash_signatures(
         delta_docs, idc, text_col, num_hashes=nh, k=int(meta["k"])
     )
@@ -1977,16 +1927,10 @@ def merge_minhash_index(
     band_rows = _band_key_rows(
         sig, idc, num_hashes=nh, bands=int(meta["bands"])
     ).select(F.col("sid").alias(idc), "key")
-    if idempotent:
-        # per-table reconcile (the merge_ivfpq_index discipline): the
-        # guard anti-join above is on sigs — the LAST table written —
-        # so a crash between the bands and sigs appends leaves bands
-        # ahead; replay must not re-append those band rows
-        band_rows = band_rows.join(
-            spark.table(tables["bands"]).select(idc), idc, "left_anti"
-        )
-    append_bucketed(band_rows, tables["bands"])
-    append_bucketed(sig, tables["sigs"])
+    append_bucketed(
+        band_rows, f"{name}_bands", reconcile_on=idc if idempotent else None
+    )
+    append_bucketed(sig, f"{name}_sigs")
 
 
 def admission_verify_exact(

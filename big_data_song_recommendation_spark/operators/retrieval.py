@@ -213,7 +213,7 @@ def build_bm25_index(
     Tokenization cost is paid ONCE here; at 100 TB the postings write
     is the same one corpus pass the scan form pays per query. Returns
     the table names."""
-    from ..sources.bucketing import write_bucketed
+    from ..sources.bucketing import finish_index_build, write_bucketed
 
     toks = _tokenized(docs, id_col, text_col)
     dl = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
@@ -234,15 +234,7 @@ def build_bm25_index(
     ).write.format("parquet").mode("overwrite").saveAsTable(
         tables["totals"]
     )
-    # one round-trip sanity: the planner must see the bucket spec.
-    # Explicit raise (not assert): this is a library WRITE path and
-    # must fail loudly under `python -O` too.
-    if not spark.catalog.tableExists(tables["postings"]):
-        raise RuntimeError(
-            f"build_bm25_index: bucketed postings table "
-            f"{tables['postings']!r} missing from the catalog after "
-            "write — check the warehouse dir / catalog config"
-        )
+    finish_index_build(spark, name, tables, op="build_bm25_index")
     return tables
 
 
@@ -348,9 +340,10 @@ def merge_bm25_index(
     idempotent: bool = False,
 ) -> None:
     """Fold a batch of NEW documents into a persisted BM25 index —
-    insert-only incremental view maintenance (the
-    ``aggregates.merge_summaries`` discipline applied to the retrieval
-    layout), so a daily crawl increment never re-tokenizes the corpus:
+    insert-only incremental view maintenance under the protocol of
+    ``sources.bucketing.insert_only_delta`` (``check_new_ids`` and
+    ``idempotent`` are its steady-state and replay modes), so a daily
+    crawl increment never re-tokenizes the corpus:
 
     - ``{name}_postings``: the delta's ``(tok, id, tf, dl)`` rows
       APPEND into the bucketed table with the EXISTING bucket spec
@@ -368,77 +361,39 @@ def merge_bm25_index(
     Post-merge scores are IDENTICAL to a full rebuild on the union
     corpus by construction: every quantity ``_score_topk`` reads
     (per-doc tf/dl, per-token df, corpus totals) is additive over
-    disjoint document sets. That additivity REQUIRES delta ids to be
-    new — re-ingesting an id would silently double its postings — so
-    by default the merge anti-checks delta ids against the index and
-    raises on overlap. The check scans the postings id column (the
-    table is bucketed by ``tok``, not id); pipelines with an upstream
-    dedup store (the curation front door) can pass
-    ``check_new_ids=False``. ``idempotent=True`` instead anti-joins
-    already-indexed ids OUT of the delta so a crash-replay of the same
-    merge inserts nothing twice — the reconcile path streaming callers
-    take when an intent marker exists without its commit marker
-    (``streaming.jobs.CurationSink``); the steady-state merge stays
-    scan-free. Because postings is the FIRST table written, a crash
-    after its append but before the terms/totals rebuild would make a
-    guard-on-postings replay a no-op and leave df/N/avgdl permanently
-    behind the postings — so the idempotent path never trusts the
-    additive merge: it ALWAYS rebuilds terms and totals FROM the
-    postings table (both are pure aggregates of it: df = row count
-    per tok, totals from the distinct per-doc dl), repairing any
-    crash point at the cost of one postings scan — paid only on the
-    suspicious-replay path. Updates/deletes are NOT expressible as
-    negative postings here (rank windows are not retractable the way
-    sums are): rebuild the affected docs via filtered rebuild instead.
+    disjoint document sets. The overlap check scans the postings id
+    column (the table is bucketed by ``tok``, not id). Postings is the
+    only table appended, so it is the replay guard — but a crash after
+    its append and before the terms/totals swap would leave df/N/avgdl
+    behind the postings with nothing left to append. So the replay
+    path never trusts the additive merge: it ALWAYS rebuilds terms and
+    totals FROM the postings table (both are pure aggregates of it:
+    df = row count per tok, totals from the distinct per-doc dl),
+    repairing any crash point at the cost of one postings scan — paid
+    only on the suspicious-replay path. Updates/deletes are NOT
+    expressible as negative postings here (rank windows are not
+    retractable the way sums are): rebuild the affected docs instead.
     """
-    from ..sources.bucketing import append_bucketed
+    from ..sources.bucketing import append_bucketed, insert_only_delta
 
     spark = delta_docs.sparkSession
     tables = {s: f"{name}_{s}" for s in ("postings", "terms", "totals")}
-    for t in tables.values():
-        if not spark.catalog.tableExists(t):
-            raise RuntimeError(
-                f"merge_bm25_index: {t!r} missing — build_bm25_index first"
-            )
+    delta_docs = insert_only_delta(
+        delta_docs, name, tuple(tables), op="merge_bm25_index",
+        guard="postings", id_col=id_col, check_new_ids=check_new_ids,
+        idempotent=idempotent,
+    )
+    if delta_docs is not None:
+        toks = _tokenized(delta_docs, id_col, text_col)
+        dl = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
+        tf = toks.groupBy(id_col, "tok").agg(F.count("*").alias("tf"))
+        postings_delta = tf.join(dl, id_col).select("tok", id_col, "tf", "dl")
+        append_bucketed(postings_delta, tables["postings"])
     if idempotent:
-        delta_docs = delta_docs.join(
-            spark.table(tables["postings"]).select(id_col),
-            id_col,
-            "left_anti",
-        )
-        if delta_docs.limit(1).isEmpty():
-            # Nothing to append — but the previous attempt may have
-            # died AFTER the postings append and BEFORE the
-            # terms/totals rebuild, so repair them from postings
-            # unconditionally before declaring the replay done.
-            _rebuild_bm25_aggregates(spark, tables, id_col)
-            return
-    elif check_new_ids:
-        dup = (
-            spark.table(tables["postings"])
-            .select(id_col)
-            .join(delta_docs.select(id_col), id_col, "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "merge_bm25_index: delta contains ids already indexed — "
-                "insert-only IVM would double their postings; dedup "
-                "upstream or rebuild"
-            )
-    toks = _tokenized(delta_docs, id_col, text_col)
-    dl = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
-    tf = toks.groupBy(id_col, "tok").agg(F.count("*").alias("tf"))
-    postings_delta = tf.join(dl, id_col).select("tok", id_col, "tf", "dl")
-    append_bucketed(postings_delta, tables["postings"])
-    if idempotent:
-        # Replay mode never trusts the additive merge: the crash being
-        # reconciled may sit anywhere between the postings append and
-        # the totals swap, so derive terms/totals from the one source
-        # of truth (identical values by the same additivity argument —
-        # the additive merge IS the incremental evaluation of these
-        # aggregates).
+        # the crash being reconciled may sit anywhere between the
+        # postings append and the totals swap, so derive terms/totals
+        # from the one source of truth (identical values: the additive
+        # merge IS the incremental evaluation of these aggregates)
         _rebuild_bm25_aggregates(spark, tables, id_col)
         return
     delta_terms = tf.groupBy("tok").agg(F.count("*").alias("df"))

@@ -227,6 +227,14 @@ from ..functions.scalars import int_array_lit as _int_array_lit  # noqa: E402
 # (shared: functions/scalars.int_array_lit — the round-11 py4j
 # literal-tax fix; langid/quality_clf stage their weight tables
 # through the same helper)
+from ..sources.bucketing import (  # noqa: E402
+    append_bucketed,
+    bucket_spec,
+    finish_index_build,
+    index_meta,
+    insert_only_delta,
+    write_bucketed,
+)
 from ..sources.readers import local_frame  # noqa: E402
 # (r12: literal row sets stage as in-JVM LocalRelations — the
 # createDataFrame RDD path schedules a defaultParallelism-task Python
@@ -1174,7 +1182,7 @@ def ivfpq_rebuild_advice(
     count."""
     import math
 
-    meta = _ivfpq_meta(spark, name)
+    meta = _ivfpq_layout(index_meta(spark, name), name)
     if n_now is None:
         n_now = spark.table(f"{name}_by_id").count()
     n_now = int(n_now)
@@ -1276,7 +1284,6 @@ def maintain_ivfpq_index(
             vec_col=vec_col,
             coarse_centroids=coarse_centroids,
             codebooks=codebooks,
-            check_new_ids=not idempotent,
             idempotent=idempotent,
         )
         merged = True
@@ -1287,7 +1294,7 @@ def maintain_ivfpq_index(
            "centroids": coarse_centroids}
     if advice["action"] != "rebuild":
         return out
-    meta = _ivfpq_meta(spark, name, fresh=True)
+    meta = _ivfpq_layout(index_meta(spark, name, fresh=True), name)
     residual = meta["variant"] == "residual"
     if residual and residual_codebooks_fn is None:
         out["action"] = "rebuild_deferred"
@@ -1316,8 +1323,6 @@ def maintain_ivfpq_index(
     new_books = (
         residual_codebooks_fn(corpus, new_cents) if residual else codebooks
     )
-    from ..sources.bucketing import bucket_spec
-
     build_ivfpq_index(
         corpus,
         id_col=idc,
@@ -1781,8 +1786,6 @@ def build_srp_index(
     from the same layout. Signature cost (the explode+groupBy GEMM)
     is paid ONCE here. Returns the table names.
     """
-    from ..sources.bucketing import write_bucketed
-
     spark = corpus.sparkSession
     dim = vectors.infer_dim(corpus, vec_col)
     sigs = srp_signatures(
@@ -1803,27 +1806,12 @@ def build_srp_index(
     }
     write_bucketed(rows, tables["by_bucket"], "bucket", n_buckets=n_buckets)
     write_bucketed(rows, tables["by_id"], id_col, n_buckets=n_buckets)
-    local_frame(
-        spark,
-        [(planes, dim, id_col, label_col is not None)],
-        "planes int, dim int, id_col string, has_label boolean",
-    ).write.format("parquet").mode("overwrite").saveAsTable(tables["meta"])
-    for t in ("by_bucket", "by_id"):
-        if not spark.catalog.tableExists(tables[t]):
-            raise RuntimeError(
-                f"build_srp_index: bucketed table {tables[t]!r} missing "
-                "from the catalog after write — check the warehouse dir"
-            )
-    _srp_meta_memo.pop((id(spark), name), None)  # rebuilt: drop stale meta
+    finish_index_build(
+        spark, name, tables, op="build_srp_index",
+        meta=((planes, dim, id_col, label_col is not None),
+              "planes int, dim int, id_col string, has_label boolean"),
+    )
     return tables
-
-
-#: per-(session, index-name) metadata memo — the meta table is one
-#: immutable row per build; re-collecting it per request would add a
-#: whole scheduling round trip to every serving call. Rebuilding an
-#: index under the same name in the same session invalidates the memo
-#: (build_srp_index pops the key).
-_srp_meta_memo: dict = {}
 
 
 def merge_srp_index(
@@ -1836,9 +1824,11 @@ def merge_srp_index(
     idempotent: bool = False,
 ) -> None:
     """Fold a batch of NEW vectors into a persisted SRP serving layout
-    (:func:`build_srp_index`) — insert-only incremental maintenance,
-    the ``retrieval.merge_bm25_index`` discipline on the vector side,
-    so a daily embedding increment never re-hashes the corpus.
+    (:func:`build_srp_index`) — insert-only incremental maintenance
+    under the protocol of ``sources.bucketing.insert_only_delta``
+    (``check_new_ids`` and ``idempotent`` are its steady-state and
+    replay modes), so a daily embedding increment never re-hashes the
+    corpus.
 
     Simpler than BM25 by construction: the BM25 scorer reads CORPUS
     aggregates (per-token df, totals) that a merge must re-aggregate
@@ -1849,38 +1839,18 @@ def merge_srp_index(
     two bucketed APPENDs under the existing bucket specs: pruning is
     preserved (each bucket gains one file per merge; compact with
     ``sources.bucketing.compact_bucketed_table``), and merged ==
-    rebuilt holds BIT-EXACTLY — test-pinned, not only argued.
-
-    Insert-only: a re-ingested id would come back twice from the
-    candidate read, so delta ids are anti-checked against
-    ``{name}_by_id`` by default; pass ``check_new_ids=False`` when an
-    upstream dedup store owns that invariant, or ``idempotent=True``
-    to anti-join already-indexed ids OUT of the delta instead of
-    raising — the crash-replay reconcile mode (the
-    merge_minhash_index discipline; see CurationSink._guarded_merge).
-    Replay guards on ``by_id``, the LAST table written, and each
-    append additionally anti-joins its own table, so a crash BETWEEN
-    the by_bucket and by_id appends repairs instead of duplicating
-    bucket rows. Updates/deletes have no retraction story in this
-    layout — rebuild the affected vectors.
+    rebuilt holds BIT-EXACTLY — test-pinned, not only argued. Delta
+    ids are checked against ``{name}_by_id``, the table appended last
+    (a re-ingested id would come back twice from the candidate read).
     """
-    from ..sources.bucketing import append_bucketed
-
-    spark = delta.sparkSession
-    tables = {s: f"{name}_{s}" for s in ("by_bucket", "by_id", "meta")}
-    for t in tables.values():
-        if not spark.catalog.tableExists(t):
-            raise RuntimeError(
-                f"merge_srp_index: {t!r} missing — build_srp_index first"
-            )
-    # fresh read (not the serving memo): merging on a stale meta for a
-    # rebuilt same-name index would mix hash families
-    meta = _srp_meta(spark, name, fresh=True)
+    delta = insert_only_delta(
+        delta, name, ("by_bucket", "by_id", "meta"), op="merge_srp_index",
+        guard="by_id", check_new_ids=check_new_ids, idempotent=idempotent,
+    )
+    if delta is None:
+        return
+    meta = index_meta(delta.sparkSession, name)  # insert_only_delta read it fresh
     idc = meta["id_col"]
-    if idc not in delta.columns:
-        raise ValueError(
-            f"merge_srp_index: delta lacks the index id column {idc!r}"
-        )
     dim = vectors.infer_dim(delta, vec_col)
     if dim != int(meta["dim"]):
         raise ValueError(
@@ -1891,26 +1861,6 @@ def merge_srp_index(
             "merge_srp_index: label_col must match the built index "
             f"(has_label={bool(meta['has_label'])})"
         )
-    if idempotent:
-        delta = delta.join(
-            spark.table(tables["by_id"]).select(idc), idc, "left_anti"
-        )
-        if delta.limit(1).isEmpty():
-            return
-    elif check_new_ids:
-        dup = (
-            spark.table(tables["by_id"])
-            .select(idc)
-            .join(delta.select(idc), idc, "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "merge_srp_index: delta contains ids already indexed — "
-                "insert-only maintenance would duplicate candidates; "
-                "dedup upstream or rebuild"
-            )
     sigs = srp_signatures(
         delta, id_col=idc, vec_col=vec_col, planes=int(meta["planes"])
     )
@@ -1922,24 +1872,10 @@ def merge_srp_index(
     if label_col is not None:
         cols.append(F.col(label_col).alias("lbl"))
     rows = delta.select(*cols).join(sigs, idc)
-    for t in ("by_bucket", "by_id"):
-        out = rows
-        if idempotent:
-            # per-table reconcile (the merge_ivfpq_index discipline):
-            # the guard anti-join above is on by_id — the LAST table
-            # written — so a crash between the two appends leaves
-            # by_bucket ahead; replay must not re-append those rows
-            out = rows.join(
-                spark.table(tables[t]).select(idc), idc, "left_anti"
-            )
-        append_bucketed(out, tables[t])
-
-
-def _srp_meta(spark, name: str, *, fresh: bool = False):
-    key = (id(spark), name)
-    if fresh or key not in _srp_meta_memo:
-        _srp_meta_memo[key] = spark.table(f"{name}_meta").collect()[0]
-    return _srp_meta_memo[key]
+    append_bucketed(
+        rows, f"{name}_by_bucket", reconcile_on=idc if idempotent else None
+    )
+    append_bucketed(rows, f"{name}_by_id")
 
 
 def _sql_lit(v) -> str:
@@ -2025,7 +1961,7 @@ def _srp_probe_rows(spark, probe_ids: list, name: str):
     no row."""
     if not probe_ids:
         raise ValueError("srp serving: probe_ids must be non-empty")
-    meta = _srp_meta(spark, name)
+    meta = index_meta(spark, name)
     by_id = spark.table(f"{name}_by_id")
     rows = by_id.filter(_in_sql(meta["id_col"], probe_ids)).collect()
     return rows, by_id.schema, meta
@@ -2151,30 +2087,18 @@ def _artifact_fp(coarse_centroids, books) -> str:
     ).hexdigest()
 
 
-#: per-(session, index-name) meta memo — the _srp_meta_memo discipline
-_ivfpq_meta_memo: dict = {}
-
-
-def _ivfpq_meta(spark, name: str, *, fresh: bool = False):
-    """Meta row of a persisted IVF+PQ index. Serving memoizes it (the
-    _srp_meta discipline — one point read per session per index);
-    MERGES pass ``fresh=True`` and re-read the table: a merge acting
-    on a stale memo (index rebuilt under the same name since the memo
-    was taken) would mix code spaces, and a merge is never
-    latency-critical. Pre-round-11 meta rows (no ``variant`` /
-    ``n_at_build``) fail with a rebuild hint instead of a bare
-    field error."""
-    key = (id(spark), name)
-    if fresh or key not in _ivfpq_meta_memo:
-        row = spark.table(f"{name}_meta").collect()[0]
-        if "variant" not in row.__fields__ or "n_at_build" not in row.__fields__:
-            raise ValueError(
-                f"{name}_meta predates the round-11 layout (variant/"
-                "n_at_build missing) — rebuild the index with "
-                "build_ivfpq_index"
-            )
-        _ivfpq_meta_memo[key] = row
-    return _ivfpq_meta_memo[key]
+def _ivfpq_layout(meta, name: str):
+    """``meta``, an IVF+PQ meta row (:func:`~..sources.bucketing.index_meta`),
+    once it is known to carry the round-11 layout: pre-round-11 rows
+    (no ``variant`` / ``n_at_build``) fail with a rebuild hint instead
+    of a bare field error."""
+    if "variant" not in meta.__fields__ or "n_at_build" not in meta.__fields__:
+        raise ValueError(
+            f"{name}_meta predates the round-11 layout (variant/"
+            "n_at_build missing) — rebuild the index with "
+            "build_ivfpq_index"
+        )
+    return meta
 
 
 def _with_routing(df: DataFrame, centroids: list, vec_col: str) -> DataFrame:
@@ -2268,8 +2192,6 @@ def build_ivfpq_index(
     :func:`pq_encode` / :func:`pq_residual_encode`), so rebuild ==
     merge == in-session bit-exactly.
     """
-    from ..sources.bucketing import write_bucketed
-
     spark = corpus.sparkSession
     coarse_centroids, codebooks = _ivfpq_params(coarse_centroids, codebooks)
     books, m_sub, k_cent, dim, d = (
@@ -2289,24 +2211,16 @@ def build_ivfpq_index(
     # compares against to decide merge vs K ∝ √n retrain; the count
     # reads the just-written bucketed table (metadata-cheap)
     n_at_build = spark.table(tables["by_id"]).count()
-    local_frame(
-        spark,
-        [
-            (
-                dim,
-                id_col,
-                len(coarse_centroids),
-                m_sub,
-                k_cent,
-                _artifact_fp(coarse_centroids, books),
-                "residual" if residual else "raw",
-                n_at_build,
-            )
-        ],
-        "dim int, id_col string, n_centroids int, pq_m int, pq_k int,"
-        " artifact_fp string, variant string, n_at_build bigint",
-    ).write.format("parquet").mode("overwrite").saveAsTable(tables["meta"])
-    _ivfpq_meta_memo.pop((id(spark), name), None)
+    finish_index_build(
+        spark, name, tables, op="build_ivfpq_index",
+        meta=(
+            (dim, id_col, len(coarse_centroids), m_sub, k_cent,
+             _artifact_fp(coarse_centroids, books),
+             "residual" if residual else "raw", n_at_build),
+            "dim int, id_col string, n_centroids int, pq_m int, pq_k int,"
+            " artifact_fp string, variant string, n_at_build bigint",
+        ),
+    )
     return tables
 
 
@@ -2369,32 +2283,27 @@ def merge_ivfpq_index(
     idempotent: bool = False,
 ) -> None:
     """Fold NEW vectors into a persisted IVF+PQ layout — insert-only
-    incremental maintenance (the merge_srp_index discipline): every
+    incremental maintenance under the protocol of
+    ``sources.bucketing.insert_only_delta`` (``check_new_ids`` and
+    ``idempotent`` are its steady-state and replay modes): every
     stored row is a pure function of its own vector and the COMMITTED
     artifacts (integer argmin assignment, integer argmin codes), so
     the merge is two bucketed APPENDs and merged == rebuilt holds
     bit-exactly. The artifact fingerprint is checked against the meta
     row — merging with different centroids/codebooks would silently
-    mix incompatible code spaces. ``idempotent=True`` anti-joins
-    already-indexed ids out of the delta instead of raising — the
-    crash-replay reconcile mode shared by every index merge. The
-    anti-join guards on ``by_id`` — the LAST table written, so its
-    presence implies the codes append completed — and the codes
-    append additionally anti-joins its own table in replay mode,
-    closing the crash window BETWEEN the two appends (a guard-only
-    replay would re-append codes there, and duplicate code rows pass
-    the ADC/rerank windows as repeated neighbor_id entries)."""
-    from ..sources.bucketing import append_bucketed
-
-    spark = delta.sparkSession
-    tables = {s: f"{name}_{s}" for s in ("codes", "by_id", "meta")}
-    for t in tables.values():
-        if not spark.catalog.tableExists(t):
-            raise RuntimeError(
-                f"merge_ivfpq_index: {t!r} missing — build_ivfpq_index first"
-            )
+    mix incompatible code spaces. Delta ids are checked against
+    ``{name}_by_id``, the table appended last; a replay's codes append
+    reconciles on its own ids, since duplicate code rows would pass
+    the ADC/rerank windows as repeated neighbor_id entries."""
+    delta = insert_only_delta(
+        delta, name, ("codes", "by_id", "meta"), op="merge_ivfpq_index",
+        guard="by_id", check_new_ids=check_new_ids, idempotent=idempotent,
+    )
+    if delta is None:
+        return
     coarse_centroids, codebooks = _ivfpq_params(coarse_centroids, codebooks)
-    meta = _ivfpq_meta(spark, name, fresh=True)
+    # insert_only_delta read it fresh
+    meta = _ivfpq_layout(index_meta(delta.sparkSession, name), name)
     residual = meta["variant"] == "residual"
     books, m_sub, k_cent, dim, d = (
         _rpq_params(codebooks) if residual else _pq_params(codebooks)
@@ -2405,38 +2314,13 @@ def merge_ivfpq_index(
             "merge_ivfpq_index: centroids/codebooks differ from the "
             "ones the index was built with — rebuild instead"
         )
-    if idempotent:
-        delta = delta.join(
-            spark.table(tables["by_id"]).select(idc), idc, "left_anti"
-        )
-        if delta.limit(1).isEmpty():
-            return
-    elif check_new_ids:
-        dup = (
-            spark.table(tables["by_id"])
-            .select(idc)
-            .join(delta.select(idc), idc, "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "merge_ivfpq_index: delta contains ids already indexed — "
-                "insert-only maintenance would duplicate candidates; "
-                "dedup upstream or rebuild"
-            )
     enc, by_id = _ivfpq_rows(
         delta, idc, vec_col, coarse_centroids, codebooks, dim, residual
     )
-    for df, t in ((enc, "codes"), (by_id, "by_id")):
-        if idempotent:
-            # per-table reconcile: rows this table already holds are
-            # anti-joined out, so a replay of a crash BETWEEN the two
-            # appends repairs rather than duplicates
-            df = df.join(
-                spark.table(tables[t]).select(idc), idc, "left_anti"
-            )
-        append_bucketed(df, tables[t])
+    append_bucketed(
+        enc, f"{name}_codes", reconcile_on=idc if idempotent else None
+    )
+    append_bucketed(by_id, f"{name}_by_id")
 
 
 def _fits_broadcast(df: DataFrame) -> bool:
@@ -2490,7 +2374,7 @@ def ivfpq_topk_indexed(
     if not probe_ids:
         raise ValueError("ivfpq serving: probe_ids must be non-empty")
     coarse_centroids, codebooks = _ivfpq_params(coarse_centroids, codebooks)
-    meta = _ivfpq_meta(spark, name)
+    meta = _ivfpq_layout(index_meta(spark, name), name)
     residual = meta["variant"] == "residual"
     books, m_sub, k_cent, dim, d = (
         _rpq_params(codebooks) if residual else _pq_params(codebooks)

@@ -28,6 +28,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
+from .readers import local_frame
+
 
 def write_bucketed(
     df: DataFrame,
@@ -84,25 +86,146 @@ def bucket_spec(spark, table: str) -> tuple[int, list[str], list[str], str]:
     )
 
 
-def append_bucketed(df: DataFrame, table: str) -> None:
+def append_bucketed(
+    df: DataFrame, table: str, *, reconcile_on: str | None = None
+) -> None:
     """Append ``df`` to an existing bucketed catalog table under that
     table's own bucket count, bucket columns and sort columns — the
     one write every incremental index merge goes through. Like
-    :func:`write_bucketed`, it adds at most one file per bucket."""
-    n_buckets, bucket_cols, sort_cols, _ = bucket_spec(df.sparkSession, table)
+    :func:`write_bucketed`, it adds at most one file per bucket.
+    ``reconcile_on`` names an id column for a merge REPLAY: rows whose
+    id the table already holds are anti-joined out first, so a replay
+    never appends a row twice (see :func:`insert_only_delta`)."""
+    spark = df.sparkSession
+    if reconcile_on is not None:
+        df = df.join(
+            spark.table(table).select(reconcile_on), reconcile_on, "left_anti"
+        )
+    n_buckets, bucket_cols, sort_cols, _ = bucket_spec(spark, table)
     write_bucketed(
         df, table, bucket_cols, n_buckets=n_buckets, sort=sort_cols,
         mode="append",
     )
 
 
-def bucketed_join(spark, left_table: str, right_table: str, key: str) -> DataFrame:
-    """Equi-join two same-bucketed catalog tables on their bucket key.
-    With matching bucket counts the physical plan carries no Exchange —
-    assert that in tests rather than trusting it."""
-    lt = spark.table(left_table)
-    rt = spark.table(right_table)
-    return lt.join(rt, key)
+# ---------------------------------------------------------------------------
+# Index maintenance: the one protocol the four persisted serving indexes
+# (BM25, MinHash, SRP, IVF-PQ) are built and merged under
+# ---------------------------------------------------------------------------
+
+#: per-(session, index-name) ``{name}_meta`` row. The meta table is one
+#: immutable row per build; re-collecting it per request would add a
+#: whole scheduling round trip to every serving call. A build drops its
+#: entry (:func:`finish_index_build`), merges re-read it.
+_meta_memo: dict = {}
+
+
+def index_meta(spark, name: str, *, fresh: bool = False):
+    """The ``{name}_meta`` row of a persisted index, memoized per
+    session. ``fresh=True`` re-reads the table and refreshes the memo —
+    what a merge does, since acting on a memo taken before a same-name
+    rebuild in another session would mix hash families or code
+    spaces; a merge is never latency-critical."""
+    key = (id(spark), name)
+    if fresh or key not in _meta_memo:
+        _meta_memo[key] = spark.table(f"{name}_meta").collect()[0]
+    return _meta_memo[key]
+
+
+def finish_index_build(
+    spark, name: str, tables: dict, *, op: str, meta: tuple | None = None
+) -> None:
+    """Close the build ``op`` of index ``name``: write its one-row
+    ``{name}_meta`` table from ``meta``, a ``(row, schema)`` pair,
+    check that every table in ``tables`` reached the catalog, and drop
+    the session's memoized meta so the next request reads this build's
+    row. Explicit raise, not assert: a library write path must fail
+    loudly under ``python -O`` too."""
+    if meta is not None:
+        row, schema = meta
+        local_frame(spark, [row], schema).write.format("parquet").mode(
+            "overwrite"
+        ).saveAsTable(f"{name}_meta")
+    for t in tables.values():
+        if not spark.catalog.tableExists(t):
+            raise RuntimeError(
+                f"{op}: table {t!r} missing from the catalog after write "
+                "— check the warehouse dir / catalog config"
+            )
+    _meta_memo.pop((id(spark), name), None)
+
+
+def insert_only_delta(
+    delta: DataFrame,
+    name: str,
+    suffixes: tuple[str, ...],
+    *,
+    op: str,
+    guard: str,
+    id_col: str | None = None,
+    check_new_ids: bool = True,
+    idempotent: bool = False,
+) -> DataFrame | None:
+    """The preamble of every index merge ``op`` (``merge_bm25_index``,
+    ``merge_minhash_index``, ``merge_srp_index``,
+    ``merge_ivfpq_index``): the rows of ``delta`` to append to index
+    ``name``, or ``None`` when a replay has nothing left to append.
+
+    The indexes are maintained INSERT-ONLY: every stored row is a pure
+    function of its own document or vector and the build's fixed
+    parameters (the meta row), and the BM25 corpus aggregates are
+    additive over disjoint document sets, so merging a delta equals
+    rebuilding on the union — provided its ids are new. A re-ingested
+    id would double its rows; updates and deletes have no retraction
+    here, so rebuild the affected rows instead.
+
+    - Every ``{name}_{suffix}`` table must exist (``RuntimeError``
+      naming the build to run first), and ``delta`` must carry the
+      index id column: ``id_col``, or when ``None`` the meta row's,
+      read with :func:`index_meta` ``fresh=True`` — the merge then
+      reads the same row from the memo.
+    - Steady state (``idempotent=False``): ``check_new_ids`` anti-checks
+      the delta ids against ``{name}_{guard}`` with one
+      ``left_semi … limit(1)`` job and raises ``ValueError`` on
+      overlap. A pipeline whose upstream dedup store owns id newness
+      (the curation front door) passes ``check_new_ids=False``, and
+      the merge is then scan-free.
+    - Replay (``idempotent=True``): already-indexed ids are anti-joined
+      OUT of the delta instead — the crash-replay reconcile that
+      ``streaming.jobs.CurationSink._guarded_merge`` runs when it finds
+      an intent marker without its commit marker. ``guard`` must name
+      the table the merge appends LAST, so an id found there has
+      landed in every table; each earlier append passes
+      ``reconcile_on`` to :func:`append_bucketed`, so a crash between
+      two appends is repaired instead of duplicated. Tables derived
+      from others (BM25's terms and totals) are rebuilt from their
+      source by the merge itself.
+
+    The protocol is reconciled, not transactional: a table format with
+    commits (Delta, Iceberg) would make the same guarantee atomic."""
+    spark = delta.sparkSession
+    for t in (f"{name}_{s}" for s in suffixes):
+        if not spark.catalog.tableExists(t):
+            raise RuntimeError(
+                f"{op}: {t!r} missing — {op.replace('merge_', 'build_', 1)} first"
+            )
+    if id_col is None:
+        id_col = index_meta(spark, name, fresh=True)["id_col"]
+    if id_col not in delta.columns:
+        raise ValueError(f"{op}: delta lacks the index id column {id_col!r}")
+    if not (idempotent or check_new_ids):
+        return delta
+    indexed = spark.table(f"{name}_{guard}").select(id_col)
+    if idempotent:
+        delta = delta.join(indexed, id_col, "left_anti")
+        return None if delta.limit(1).isEmpty() else delta
+    if indexed.join(delta.select(id_col), id_col, "left_semi").limit(1).count():
+        raise ValueError(
+            f"{op}: delta contains ids already indexed — insert-only "
+            "maintenance would duplicate their rows; dedup upstream or "
+            "rebuild"
+        )
+    return delta
 
 
 def compact_bucketed_table(spark, table: str) -> dict:

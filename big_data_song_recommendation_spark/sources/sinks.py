@@ -12,8 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bucketing import write_bucketed
-
 
 def write_parquet(
     df: DataFrame,
@@ -40,28 +38,6 @@ def write_events_by_day(df: DataFrame, path: str, *, ts_col: str = "ts") -> None
         df.withColumn("event_date", F.to_date(F.col(ts_col))),
         path,
         partition_by=["event_date"],
-    )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    *,
-    bucket_by: str,
-    n_buckets: int = 16,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table: rows are hash-clustered into
-    ``n_buckets`` files at WRITE time, so equi-joins and
-    aggregations on ``bucket_by`` between co-bucketed tables need no
-    shuffle at READ time — the join amortizes its exchange into the
-    write, the right trade for fact tables joined repeatedly on the
-    same key at 100 TB. Written by :func:`.bucketing.write_bucketed`,
-    one file per bucket."""
-    write_bucketed(
-        df, table, bucket_by, n_buckets=n_buckets,
-        sort=[sort_by] if sort_by else False, mode=mode,
     )
 
 

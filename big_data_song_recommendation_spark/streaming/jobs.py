@@ -675,14 +675,9 @@ class CurationSink:
         two tiny atomic file ops and zero extra scans; only the
         suspicious replay pays the reconcile anti-join. The
         crash-INSIDE-the-merge window is closed by the merges
-        themselves: every multi-table merge guards on its LAST-written
-        table and per-table anti-joins the earlier appends
-        (merge_minhash_index/merge_srp_index/merge_ivfpq_index), and
-        merge_bm25_index's replay mode rebuilds its derivable
-        terms/totals aggregates from postings — so a replay repairs
-        any crash point instead of duplicating or orphaning rows. A
-        transactional table format (Delta/Iceberg) would make the
-        same guarantee atomic rather than reconciled."""
+        themselves, whose replay mode is the one protocol of
+        ``sources.bucketing.insert_only_delta``: it repairs any crash
+        point instead of duplicating or orphaning rows."""
         commit = marker_dir / f"epoch={epoch_id}"
         if commit.exists():
             return False

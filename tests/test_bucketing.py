@@ -36,7 +36,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketing.bucketed_join(spark, lt, rt, "l_orderkey")
+        joined = spark.table(lt).join(spark.table(rt), "l_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -57,7 +57,8 @@ def test_unbucketed_join_does_exchange(spark, bucketed_tables):
 def test_bucketed_join_matches_plain_join(spark, bucketed_tables):
     lt, rt = bucketed_tables
     got = (
-        bucketing.bucketed_join(spark, lt, rt, "l_orderkey")
+        spark.table(lt)
+        .join(spark.table(rt), "l_orderkey")
         .agg(
             F.count("*").alias("n"),
             F.sum("l_quantity").cast("long").alias("qty"),

@@ -16,6 +16,12 @@ from big_data_song_recommendation_spark.operators.dedup import (
     near_dup_pairs_vs_corpus,
     near_dup_probe,
 )
+from big_data_song_recommendation_spark.operators.similarity import (
+    build_ivfpq_index,
+    build_srp_index,
+    ivfpq_topk_indexed,
+    srp_knn_indexed,
+)
 from big_data_song_recommendation_spark.sources.readers import load_table
 
 from .conftest import SF_DIR
@@ -59,20 +65,78 @@ def test_indexed_probe_matches_in_session(spark, mh_tables):
     assert got == want and len(got) > 0
 
 
-def test_probe_follows_a_same_name_rebuild(spark, mh_tables):
-    """near_dup_probe reads the meta row through the per-session memo;
-    rebuilding the index under the same name with another hash family
-    must reach the very next probe (build_minhash_index drops the memo
-    entry), whose rows then equal the in-session form's with that
-    family."""
-    old, probes = _corpus(spark)
-    build_minhash_index(old, num_hashes=16, bands=8, name="t_mh", n_buckets=4)
-    first = _rows(near_dup_probe(probes, name="t_mh"))
-    build_minhash_index(old, num_hashes=12, bands=4, name="t_mh", n_buckets=4)
-    got = _rows(near_dup_probe(probes, name="t_mh"))
-    want = _rows(near_dup_pairs_vs_corpus(old, probes, num_hashes=12, bands=4))
-    assert got == want and len(got) > 0
-    assert got != first
+def _emb(spark, id_col: str = "vec_id"):
+    return load_table(spark, SF_DIR, "embeddings").withColumnRenamed(
+        "vec_id", id_col
+    )
+
+
+#: kind → (build(spark, name, rebuilt), request(spark, name),
+#: want(spark) or None). The rebuild changes what a stale meta memo
+#: would get wrong: MinHash's hash family, SRP's planes and id column,
+#: IVF-PQ's code variant and id column. ``want`` gives the rebuilt
+#: parameters' rows from the in-session form; ``None`` takes them from
+#: an index built with those parameters under a fresh name.
+REBUILDS = {
+    "minhash": (
+        lambda spark, name, rebuilt: build_minhash_index(
+            _corpus(spark)[0], num_hashes=12 if rebuilt else 16,
+            bands=4 if rebuilt else 8, name=name, n_buckets=4,
+        ),
+        lambda spark, name: _rows(near_dup_probe(_corpus(spark)[1], name=name)),
+        lambda spark: _rows(
+            near_dup_pairs_vs_corpus(*_corpus(spark), num_hashes=12, bands=4)
+        ),
+    ),
+    "srp": (
+        lambda spark, name, rebuilt: build_srp_index(
+            _emb(spark, "vid" if rebuilt else "vec_id"),
+            id_col="vid" if rebuilt else "vec_id",
+            planes=8 if rebuilt else 4, name=name, n_buckets=4,
+        ),
+        lambda spark, name: _rows(
+            srp_knn_indexed(spark, [0, 5, 10, 15], name=name, k=3)
+        ),
+        None,
+    ),
+    "ivfpq": (
+        lambda spark, name, rebuilt: build_ivfpq_index(
+            _emb(spark, "vid" if rebuilt else "vec_id"),
+            id_col="vid" if rebuilt else "vec_id",
+            residual=rebuilt, name=name, n_buckets=4,
+        ),
+        lambda spark, name: _rows(
+            ivfpq_topk_indexed(spark, [0, 5, 10, 15], name=name)
+        ),
+        None,
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(REBUILDS))
+def test_probe_follows_a_same_name_rebuild(spark, kind):
+    """Serving reads the meta row through the per-session memo
+    (sources/bucketing.index_meta); rebuilding an index under the same
+    name with other parameters must reach the very next request (the
+    build drops the memo entry), whose rows then equal the rebuilt
+    parameters'."""
+    build, request, want = REBUILDS[kind]
+    built = [build(spark, "t_rebuild", False)]
+    try:
+        first = request(spark, "t_rebuild")
+        built.append(build(spark, "t_rebuild", True))
+        got = request(spark, "t_rebuild")
+        if want is None:
+            built.append(build(spark, "t_rebuild_ref", True))
+            expected = request(spark, "t_rebuild_ref")
+        else:
+            expected = want(spark)
+        assert got == expected and len(got) > 0
+        assert got != first
+    finally:
+        for tables in built:
+            for t in tables.values():
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_row_signatures_equal_the_aggregate(spark, mh_tables):

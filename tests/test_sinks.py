@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from big_data_song_recommendation_spark.sources import sinks
+from big_data_song_recommendation_spark.sources.bucketing import write_bucketed
 from big_data_song_recommendation_spark.sources.readers import load_table
 
 from .conftest import SF_DIR
@@ -128,10 +129,10 @@ def test_bucketed_join_needs_no_shuffle(spark, tmp_path):
     t1, t2 = f"orders_b_{suffix}", f"li_b_{suffix}"
     orders = load_table(spark, SF_DIR, "orders")
     li = load_table(spark, SF_DIR, "lineitem")
-    sinks.write_bucketed_table(orders, t1, bucket_by="o_orderkey", n_buckets=8)
-    sinks.write_bucketed_table(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"), t2,
-        bucket_by="o_orderkey", n_buckets=8,
+    write_bucketed(orders, t1, "o_orderkey", n_buckets=8, sort=False)
+    write_bucketed(
+        li.withColumnRenamed("l_orderkey", "o_orderkey"), t2, "o_orderkey",
+        n_buckets=8, sort=False,
     )
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
